@@ -105,7 +105,7 @@ object Tables {
     val maxPB = conf.filesMaxPartitionBytes
     val minPart = conf.filesMinPartitionNum
       .getOrElse(spark.sparkContext.defaultParallelism)
-    rels.map { r =>
+    sumScanPartitions(rels.map { r =>
       val sz = r.location.sizeInBytes
       // unknown/absurd size (e.g. Long.MaxValue sentinel): treat as big
       // — a big scan is already parallel, so fanOut must be a no-op
@@ -116,6 +116,13 @@ object Tables {
         val maxSplit = math.min(maxPB, math.max(openCost, bytesPerCore))
         math.max(1, math.ceil(total.toDouble / math.max(1L, maxSplit)).toInt)
       }
-    }.sum
+    })
   }
+
+  /** Total of per-relation split counts, summed as `Long` and clamped to
+    * `Int.MaxValue`: each unknown-size relation contributes an
+    * `Int.MaxValue / 4` sentinel, and an `Int` sum of five of them
+    * would overflow negative and make [[fanOut]] repartition a big scan. */
+  private[graft] def sumScanPartitions(parts: Seq[Int]): Int =
+    math.min(parts.map(_.toLong).sum, Int.MaxValue.toLong).toInt
 }

@@ -587,10 +587,14 @@ object Dedup {
     * the center node, and the fixpoint is a star forest rooted at each
     * component's minimum — labels read straight off the final edges. */
   def largeSmallStarComponents(edges: DataFrame, maxIters: Int = 25): DataFrame = {
-    var e = edges.filter(col("id_a") =!= col("id_b"))
+    // the initial set size rides the initial checkpoint job, so round 0
+    // can already detect a fixpoint (an input that is a star forest)
+    val initial = edges.filter(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("hi"),
         least(col("id_a"), col("id_b")).as("lo"))
-      .distinct().localCheckpoint(true)
+      .distinct()
+      .observe("star_init", coalesce(count(lit(1)), lit(0L)).as("n"))
+    var e = initial.localCheckpoint(true)
     def largeStar(cur: DataFrame): DataFrame = {
       val sym = cur.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(cur.select(col("lo").as("u"), col("hi").as("v")))
@@ -608,7 +612,8 @@ object Dedup {
     }
     var iter = 0
     var converged = false
-    var prevCount = -1L
+    var prevCount = initial.queryExecution.observedMetrics.get("star_init")
+      .map(_.getAs[Long]("n")).getOrElse(-1L)
     while (iter < maxIters && !converged) {
       // the set size rides the checkpoint job as an observe metric; a
       // size change can never be a fixpoint, so the exact-equality job

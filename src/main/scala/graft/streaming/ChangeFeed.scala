@@ -24,13 +24,20 @@ import org.apache.spark.sql.functions._
   *    is idempotent per version (a crash between sink and offset
   *    replays that version's byte-identical feed).
   *
-  * Each commit's slice diffs only that commit's CHANGED partitions
-  * ([[PartitionedTable.changes]] — untouched partitions are never
-  * scanned), so draining N commits costs the sum of their touched
-  * partitions, never N table scans. The consumer's read horizon is the
-  * table's vacuum horizon: keep `vacuum(keep = …)` at least as deep as
-  * the oldest unprocessed offset, exactly like any other time-travel
-  * reader.
+  * One code path serves both, and any consumer that wants the NET
+  * change of a whole drain instead of one call per commit (the IVF
+  * index's [[IndexFeed.maintainIvf]]): a commit's slice is the range
+  * diff [[diff]] over (prior version, commit], and the checkpoint
+  * offset is read and written only through [[readOffset]] /
+  * [[writeOffset]].
+  *
+  * Each range diff scans only the partitions whose manifest pointers
+  * differ between its endpoints ([[PartitionedTable.changes]] —
+  * untouched partitions are never scanned), so draining N commits
+  * costs the sum of their touched partitions, never N table scans. The
+  * consumer's read horizon is the table's vacuum horizon: keep
+  * `vacuum(keep = …)` at least as deep as the oldest unprocessed
+  * offset, exactly like any other time-travel reader.
   */
 object ChangeFeed {
 
@@ -81,7 +88,7 @@ object ChangeFeed {
     * [[batch]]). `-1` = bootstrap; `>= min retained` = every pending
     * slice still has its diff base. Anything between lost its base to
     * [[graft.operators.PartitionedTable.vacuum]]. */
-  private def requireHorizon(
+  private[streaming] def requireHorizon(
       retained: Seq[Long], fromVersion: Long, dir: String): Unit = {
     val oldest = retained.min
     require(fromVersion == -1L || fromVersion >= oldest,
@@ -92,29 +99,72 @@ object ChangeFeed {
         s"(snapshot of v=$oldest + retained deltas).")
   }
 
-  /** One commit's change events, tagged with its version. A version
-    * with no retained prior only emits the insert-shaped snapshot when
-    * the caller is explicitly bootstrapping (`allowSnapshot`) — any
-    * other no-prior read is a horizon violation and fails loud. */
+  /** Net change events over table-version range (`from`, `to`]: the
+    * endpoint diff of the two manifests, so a key touched by several
+    * commits in the range emits one event pair for its net change.
+    * `from = -1` is the bootstrap: `to`'s rows as inserts. The caller
+    * owns the horizon check ([[requireHorizon]]). */
+  private[streaming] def diff(
+      spark: SparkSession, dir: String, keyCol: String, partCol: String,
+      from: Long, to: Long, preImages: Boolean): DataFrame =
+    if (from != -1L)
+      PartitionedTable.changes(spark, dir, from, to, keyCol, partCol, preImages)
+    else {
+      val committed = PartitionedTable.read(spark, dir, Some(to))
+      val payload = committed.columns.toSeq
+        .filterNot(c => c == keyCol || c == partCol)
+      committed.select(Seq(col(partCol), col(keyCol),
+        lit("insert").as("op")) ++ payload.map(col): _*)
+    }
+
+  /** One commit's change events — the [[diff]] over (prior, `v`],
+    * tagged with its version. A version with no retained prior only
+    * emits the insert-shaped snapshot when the caller is explicitly
+    * bootstrapping (`allowSnapshot`) — any other no-prior read is a
+    * horizon violation and fails loud. */
   private def slice(
       spark: SparkSession, dir: String, keyCol: String, partCol: String,
       v: Long, preImages: Boolean, allowSnapshot: Boolean = false): DataFrame = {
     val prior = PartitionedTable.versions(spark, dir).filter(_ < v).maxOption
-    val events = prior match {
-      case Some(p) =>
-        PartitionedTable.changes(spark, dir, p, v, keyCol, partCol, preImages)
-      case None =>
-        require(allowSnapshot,
-          s"ChangeFeed: version $v of $dir has no retained prior to diff " +
-            "against — refusing to degrade a change slice to a snapshot " +
-            "(bootstrap explicitly with fromVersion = -1)")
-        val committed = PartitionedTable.read(spark, dir, Some(v))
-        val payload = committed.columns.toSeq
-          .filterNot(c => c == keyCol || c == partCol)
-        committed.select(Seq(col(partCol), col(keyCol),
-          lit("insert").as("op")) ++ payload.map(col): _*)
+    require(prior.isDefined || allowSnapshot,
+      s"ChangeFeed: version $v of $dir has no retained prior to diff " +
+        "against — refusing to degrade a change slice to a snapshot " +
+        "(bootstrap explicitly with fromVersion = -1)")
+    diff(spark, dir, keyCol, partCol, prior.getOrElse(-1L), v, preImages)
+      .withColumn(VersionCol, lit(v))
+  }
+
+  /** The consumer offset recorded in `checkpointDir` (the last source
+    * version it processed), or `startVersion` for a fresh checkpoint. */
+  private[streaming] def readOffset(
+      spark: SparkSession, checkpointDir: String, startVersion: Long): Long = {
+    val hfs = VersionedStore.fs(spark, checkpointDir)
+    val offsetPath = new Path(checkpointDir, "offset")
+    if (!hfs.exists(offsetPath)) startVersion
+    else {
+      val in = hfs.open(offsetPath)
+      try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+      finally in.close()
     }
-    events.withColumn(VersionCol, lit(v))
+  }
+
+  /** Record `v` as the consumer offset in `checkpointDir` (written to a
+    * temp file, then renamed into place). */
+  private[streaming] def writeOffset(
+      spark: SparkSession, checkpointDir: String, v: Long): Unit = {
+    val hfs = VersionedStore.fs(spark, checkpointDir)
+    val offsetPath = new Path(checkpointDir, "offset")
+    hfs.mkdirs(new Path(checkpointDir))
+    val tmp = new Path(checkpointDir,
+      s".tmp-offset-${java.util.UUID.randomUUID}")
+    val out = hfs.create(tmp, true)
+    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    hfs.delete(offsetPath, false)
+    if (!hfs.rename(tmp, offsetPath))
+      throw new java.io.IOException(
+        s"ChangeFeed: offset rename to $offsetPath failed")
   }
 
   /** Relay every not-yet-processed commit into `sink`, one call per
@@ -131,16 +181,7 @@ object ChangeFeed {
       sink: (DataFrame, Long) => Unit,
       preImages: Boolean = false,
       startVersion: Long = 0L): Seq[Long] = {
-    val hfs = VersionedStore.fs(spark, checkpointDir)
-    val offsetPath = new Path(checkpointDir, "offset")
-    val from =
-      if (!hfs.exists(offsetPath)) startVersion
-      else {
-        val in = hfs.open(offsetPath)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
-      }
+    val from = readOffset(spark, checkpointDir, startVersion)
     val vs = PartitionedTable.versions(spark, dir).sorted
     require(vs.nonEmpty, s"ChangeFeed: no committed versions under $dir")
     requireHorizon(vs, from, dir)
@@ -150,16 +191,7 @@ object ChangeFeed {
         allowSnapshot = from == -1L && v == vs.min)
         .localCheckpoint(true), v)
       // offset AFTER the sink: at-least-once, idempotent-per-version
-      hfs.mkdirs(new Path(checkpointDir))
-      val tmp = new Path(checkpointDir,
-        s".tmp-offset-${java.util.UUID.randomUUID}")
-      val out = hfs.create(tmp, true)
-      try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      hfs.delete(offsetPath, false)
-      if (!hfs.rename(tmp, offsetPath))
-        throw new java.io.IOException(
-          s"ChangeFeed: offset rename to $offsetPath failed")
+      writeOffset(spark, checkpointDir, v)
     }
     pending
   }

@@ -41,9 +41,27 @@ class DedupSpec extends SparkSpec {
     // alternation must finish inside 10 — the maxIters bound IS the
     // assertion, because non-convergence throws.
     val chain = (0L until 64L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val star = Dedup.largeSmallStarComponents(chain, maxIters = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = Dedup.largeSmallStarComponents(chain, maxIters = 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val star = rows.toMap
     assert(star.size === 65 && star.values.toSet === Set(0L))
+    // the multi-round fixpoint holds no duplicate (hi, lo) pair
+    assert(rows.size === star.size, "duplicate member rows in the fixpoint")
+  }
+
+  test("large/small-star converges in round 0 on an input that is already a star forest") {
+    // two stars rooted at their minimums: the initial edge set IS the
+    // fixpoint, so one round must detect it — maxIters = 1 throws if
+    // round 0 cannot compare against the initial set size
+    val stars = Seq((2L, 1L), (3L, 1L), (4L, 1L), (11L, 10L), (12L, 10L))
+      .toDF("id_a", "id_b")
+    val rows = Dedup.largeSmallStarComponents(stars, maxIters = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    // the fixpoint holds no duplicate (hi, lo) pair: one row per member
+    assert(rows.size === rows.map(_._1).distinct.size,
+      s"duplicate member rows in the star fixpoint: $rows")
+    assert(rows.toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
   test("large/small-star equals propagation on the fixture near-dup graph") {

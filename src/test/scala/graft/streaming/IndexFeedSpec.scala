@@ -233,4 +233,68 @@ class IndexFeedSpec extends SparkSpec {
     assert(IndexFeed.searchIvf(spark, idx, model, q0,
       nprobe = model.k, k = 5).count() === 5)
   }
+
+  test("a drain over three pending commits mints exactly one index version") {
+    val src = fresh("src"); val idx = fresh("idx"); val ckpt = fresh("ckpt")
+    val model = buildSource(src)
+    IndexFeed.maintainIvf(spark, src, ckpt, idx, model, "vec_id", "part",
+      distDecimals = 6)
+    assert(PartitionedTable.versions(spark, idx).sorted === Seq(0L))
+    applyCdc(src)
+    assert(IndexFeed.maintainIvf(spark, src, ckpt, idx, model,
+      "vec_id", "part", distDecimals = 6) === Seq(1L, 2L, 3L))
+    assert(PartitionedTable.versions(spark, idx).sorted === Seq(0L, 3L),
+      "the three pending commits must land as one net index merge")
+  }
+
+  test("an interrupted drain replays from the latest index version, not the stale offset") {
+    val src = fresh("src"); val idx = fresh("idx"); val ckpt = fresh("ckpt")
+    val model = buildSource(src)
+    def clusters(): Map[Long, Long] = PartitionedTable.read(spark, idx)
+      .select(col("vec_id"), col("cluster").cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    IndexFeed.maintainIvf(spark, src, ckpt, idx, model, "vec_id", "part",
+      distDecimals = 6)
+    val atV0 = clusters()
+    val v = vecs
+    PartitionedTable.merge(spark, src, // v1: inserts
+      v.filter(col("vec_id") % 10 === 0).withColumn("op", lit("upsert")),
+      "vec_id", "part")
+    PartitionedTable.merge(spark, src, // v2: cluster-moving updates
+      v.filter(col("vec_id") % 9 === 1)
+        .withColumn("embedding", transform(col("embedding"), x => -x))
+        .withColumn("op", lit("upsert")),
+      "vec_id", "part")
+    assert(IndexFeed.maintainIvf(spark, src, ckpt, idx, model,
+      "vec_id", "part", distDecimals = 6) === Seq(1L, 2L))
+    val atV2 = clusters()
+    val moved = atV2.keys.filter(k => atV0.get(k).exists(_ != atV2(k)))
+      .toSeq.sorted
+    assert(moved.size >= 2, s"test vacuous: too few cluster moves ($moved)")
+
+    // the crash: the index merge for v2 landed, the offset write did not
+    ChangeFeed.writeOffset(spark, ckpt, 0L)
+    // v3 deletes one moved key and moves the others back (negated again)
+    val (gone, back) = (moved.take(1), moved.drop(1))
+    PartitionedTable.merge(spark, src,
+      PartitionedTable.read(spark, src)
+        .filter(col("vec_id").isin(moved: _*))
+        .withColumn("embedding", transform(col("embedding"), x => -x))
+        .withColumn("op", when(col("vec_id").isin(gone: _*), "delete")
+          .otherwise("upsert")),
+      "vec_id", "part")
+    assert(IndexFeed.maintainIvf(spark, src, ckpt, idx, model,
+      "vec_id", "part", distDecimals = 6) === Seq(1L, 2L, 3L))
+
+    val rebuilt = PartitionedTable.read(spark, src)
+      .select(col("vec_id"),
+        model.clusterOf(col("embedding"), 6).cast("long").as("cluster"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(clusters() === rebuilt,
+      "the replayed index must equal a frozen-model rebuild")
+    assert(back.forall(k => rebuilt(k) == atV0(k)) && !rebuilt.contains(gone.head))
+    assert(PartitionedTable.read(spark, idx).groupBy("vec_id").count()
+      .filter(col("count") > 1).count() === 0,
+      "no key may sit in two inverted lists")
+  }
 }
