@@ -389,12 +389,6 @@ object PartitionedTable {
     * their version. Returns dirName -> committed store version. Crash
     * anywhere here = orphan store versions only; no manifest
     * references them. */
-  /** See [[graft.Tables.hasUserShaping]] — shaped batches land
-    * verbatim, never re-clustered by [[landPartitions]]. */
-  private def hasUserShaping(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    graft.Tables.hasUserShaping(plan)
-
   private def landPartitions(
       spark: SparkSession, dir: String, df: DataFrame, partCol: String,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
@@ -414,7 +408,7 @@ object PartitionedTable {
     // repartitioned before the checkpoint truncated its plan —
     // `preShaped`) are detected and land verbatim: a blanket reshuffle
     // here would destroy the layout they just paid for.
-    val shaped = preShaped || hasUserShaping(df.queryExecution.analyzed)
+    val shaped = preShaped || graft.Tables.hasUserShaping(df.queryExecution.analyzed)
     val toLand = df.withColumn(PartDir, col(partCol))
     (if (shaped) toLand
      else toLand.repartition(
@@ -1603,7 +1597,7 @@ object PartitionedTable {
       }
     // caller shaping must be read off the RAW plan: the checkpoint
     // below truncates it to a LogicalRDD, hiding any repartition
-    val batchShaped = hasUserShaping(changes.queryExecution.analyzed)
+    val batchShaped = graft.Tables.hasUserShaping(changes.queryExecution.analyzed)
     val pre = changes.filter(col(partCol).isNotNull)
     val batch =
       if (isMaterialized(changes.queryExecution.analyzed)) pre
@@ -2575,8 +2569,9 @@ object PartitionedTable {
   /** Shallow-clone `srcDir`'s table state (`asOf`, default newest) into
     * empty `dstDir`: commits the source's partition mapping as the
     * clone's manifest v0 plus a `_clone` pointer — pure metadata, zero
-    * data movement. The generation rule (if any) carries over, so
-    * generated routing and [[readWhereSrc]] keep working on the clone.
+    * data movement. The generated level spec (if any, N >= 1 levels)
+    * and each level's evolution chain carry over, so generated routing
+    * and [[readWhereSrcLevels]] keep working on the clone.
     * Merge-on-read deltas clone fine: a pinned delta and its base live
     * in the SAME source store dir, and per-version resolution sends
     * both source-side until the clone's own copy-on-write rewrite
@@ -2610,16 +2605,9 @@ object PartitionedTable {
     finally out.close()
     require(hfs.rename(tmp, clonePath(dstDir)),
       s"PartitionedTable: clone pointer commit failed under $dstDir")
-    genBaseOf(spark, srcDir).foreach { case (srcCol, gen, name) =>
-      declareGen(spark, dstDir, srcCol, gen, name)
-      // the full epoch chain carries over — a clone of an evolved table
-      // must attribute inherited partitions identically
-      genEpochsOf(spark, srcDir).drop(1)
-        .foreach(g => evolveGenRule(spark, dstDir, g))
-    }
-    // MULTI-LEVEL specs (and each level's evolution chain) carry over
-    // too — verbatim file copies, so a clone of the bronze year/month
-    // layout derives and prunes exactly like its source
+    // the level spec and each level's evolution chain carry over as
+    // verbatim file copies, so a clone of an evolved table attributes
+    // inherited partitions, derives and prunes exactly like its source
     locally {
       val srcFs = VersionedStore.fs(spark, srcDir)
       val srcMd = new Path(srcDir, ManifestDir)
@@ -2717,10 +2705,6 @@ object PartitionedTable {
     }
   }
 
-  private val GenFile = "_gen"
-  private def genPath(dir: String): Path =
-    new Path(new Path(dir, ManifestDir), GenFile)
-
   /** a <= b in UTF-8 BINARY order — the order Spark's string
     * comparisons (and so every residual predicate) use. Java's String
     * ordering is UTF-16 and disagrees for supplementary characters,
@@ -2738,100 +2722,8 @@ object PartitionedTable {
     x.length <= y.length
   }
 
-  /** The table's ORIGINAL declared (source column, rule, derived column
-    * name) — epoch 0, before any [[evolveGenRule]]. */
-  private def genBaseOf(
-      spark: SparkSession, dir: String): Option[(String, PartGen, String)] = {
-    val hfs = VersionedStore.fs(spark, dir)
-    val p = genPath(dir)
-    if (!hfs.exists(p)) None
-    else {
-      val Array(src, g, name) = readManifestFile(hfs, p).trim.split("\t", 3)
-      Some((src, PartGen.parse(g), name))
-    }
-  }
-
-  // spec evolution: `_gen.evolve.N` files (N >= 1), newest = current
-  // rule; the base `_gen` file is epoch 0 and never rewritten, so the
-  // chain is append-only and a crash mid-evolve leaves the prior epoch
-  // current (the constraint-catalog pattern)
-  private val GenEvolvePrefix = "_gen.evolve."
-
-  private def genEvolutions(
-      spark: SparkSession, dir: String): Seq[(Long, PartGen)] = {
-    val hfs = VersionedStore.fs(spark, dir)
-    val md = new Path(dir, ManifestDir)
-    if (!hfs.exists(md)) Nil
-    else hfs.listStatus(md).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(GenEvolvePrefix))
-      .flatMap(p => p.getName.stripPrefix(GenEvolvePrefix).toLongOption
-        .map(_ -> PartGen.parse(readManifestFile(hfs, p).trim)))
-      .sortBy(_._1)
-  }
-
-  /** Every rule epoch, oldest first (the base declaration, then each
-    * evolution). Size 1 = never evolved. */
-  def genEpochsOf(spark: SparkSession, dir: String): Seq[PartGen] =
-    genBaseOf(spark, dir).toSeq.map(_._2) ++ genEvolutions(spark, dir).map(_._2)
-
-  /** The table's declared (source column, CURRENT rule, derived column
-    * name), if it was created through [[commitGenerated]] — after an
-    * [[evolveGenRule]] this is the newest epoch, which every subsequent
-    * write derives with. */
-  def generatedBy(
-      spark: SparkSession, dir: String): Option[(String, PartGen, String)] =
-    genBaseOf(spark, dir).map { case (src, g, name) =>
-      (src, genEvolutions(spark, dir).lastOption.map(_._2).getOrElse(g), name)
-    }
-
-  /** SPEC EVOLUTION (the Iceberg semantic, on the generated-rule
-    * substrate): change the table's partition granularity FORWARD —
-    * existing partitions keep their old-rule values and layout,
-    * subsequent writes derive with the new rule, and every
-    * source-range read ([[readWhereSrc]], [[expirePartitions]])
-    * attributes each partition to ITS OWN epoch before range-mapping,
-    * so pruning composes across the boundary. Zero data movement: the
-    * evolution is one appended metadata file.
-    *
-    * Attribution needs to be unambiguous, so all epochs must be
-    * fixed-width rules with pairwise-distinct widths (year/month/day
-    * are; a prefix rule is not) — refused loud otherwise. KEYED merges
-    * against a clashing pre-evolution partition are refused by
-    * [[mergeGenerated]] (see there); evolution targets append-shaped
-    * tables, the reference's bronze ingest layout. */
-  def evolveGenRule(spark: SparkSession, dir: String, newGen: PartGen): Unit = {
-    val (srcCol, cur, name) = generatedBy(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"PartitionedTable: no generation rule declared under $dir — " +
-          "only generated tables can evolve their spec"))
-    require(newGen != cur,
-      s"PartitionedTable: $dir already partitions by ${cur.name}($srcCol)")
-    val chain = genEpochsOf(spark, dir) :+ newGen
-    val lens = chain.map(_.renderLen)
-    require(lens.forall(_.isDefined) && lens.distinct.size == lens.size,
-      s"PartitionedTable: spec evolution needs fixed-width rules with " +
-        s"pairwise-distinct widths so every partition attributes to exactly " +
-        s"one epoch; got ${chain.map(g => s"${g.name}=${g.renderLen.getOrElse("?")}ch").mkString(", ")}")
-    val hfs = VersionedStore.fs(spark, dir)
-    val next = genEvolutions(spark, dir).map(_._1).maxOption.getOrElse(0L) + 1
-    val tmp = new Path(new Path(dir, ManifestDir),
-      s".tmp-evolve-${java.util.UUID.randomUUID}")
-    val out = hfs.create(tmp, true)
-    try out.write(newGen.name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new Path(new Path(dir, ManifestDir), s"$GenEvolvePrefix$next")
-    if (!hfs.rename(tmp, dest)) {
-      hfs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"PartitionedTable: spec evolution commit failed under $dir " +
-          "(concurrent evolve?)")
-    }
-    // name kept for the doc contract: the derived column keeps its name
-    val _ = name
-  }
-
   /** The epoch rule that rendered partition value `p` — unique by
-    * [[evolveGenRule]]'s width validation; single-epoch tables skip
+    * [[evolveGenLevel]]'s width validation; single-epoch levels skip
     * attribution entirely. */
   private def epochRuleOf(epochs: Seq[PartGen], p: String): PartGen =
     if (epochs.size <= 1) epochs.head
@@ -2841,38 +2733,12 @@ object PartitionedTable {
           s"matches no declared rule epoch " +
           s"(${epochs.map(g => s"${g.name}=${g.renderLen.getOrElse("?")}ch").mkString(", ")})"))
 
-  /** Declare (write-once, atomic) or verify the table's generation
-    * rule. A second declaration must MATCH — silently repartitioning an
-    * existing table under a different rule would make every prior
-    * partition value a lie to [[readWhereSrc]]. */
-  private def declareGen(
-      spark: SparkSession, dir: String, srcCol: String, gen: PartGen,
-      partName: String): Unit = {
-    val hfs = VersionedStore.fs(spark, dir)
-    hfs.mkdirs(new Path(dir, ManifestDir))
-    val p = genPath(dir)
-    if (!hfs.exists(p)) {
-      val tmp = new Path(new Path(dir, ManifestDir),
-        s".tmp-gen-${java.util.UUID.randomUUID}")
-      val out = hfs.create(tmp, true)
-      try out.write(s"$srcCol\t${gen.name}\t$partName"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!hfs.rename(tmp, p)) hfs.delete(tmp, true): Unit // racer won: verify
-    }
-    val (s0, g0, n0) = generatedBy(spark, dir).getOrElse(
-      throw new java.io.IOException(
-        s"PartitionedTable: generation-rule declaration failed under $dir"))
-    require(s0 == srcCol && g0 == gen && n0 == partName,
-      s"PartitionedTable: table under $dir is generated as " +
-        s"$n0 = ${g0.name}($s0); refusing conflicting " +
-        s"$partName = ${gen.name}($srcCol)")
-  }
-
-  /** DDL leg of the MULTI-LEVEL machinery: declare a level spec on an
-    * EMPTY ([[createEmpty]]) table — `CREATE TABLE ... PARTITIONED BY
-    * (truncate(status, 1), months(ts))` binds here; the first write
-    * derives every level and the composite. */
+  /** DDL leg of the generated-partition machinery: declare a level spec
+    * on an EMPTY ([[createEmpty]]) table, so the FIRST write already
+    * derives the partition column(s) and every read prunes from
+    * source-column predicates — `CREATE TABLE ... PARTITIONED BY
+    * (months(ts))` (one level) or `(truncate(status, 1), months(ts))`
+    * (two) binds here. */
   def declareGeneratedLevels(
       spark: SparkSession, dir: String, levels: Seq[GenLevel]): Unit = {
     require(levels.nonEmpty, "declareGeneratedLevels: need >= 1 level")
@@ -2881,154 +2747,47 @@ object PartitionedTable {
     declareGenLevels(spark, dir, levels)
   }
 
-  /** DDL leg of the generated-partition machinery: declare the rule on
-    * an EMPTY ([[createEmpty]]) table, so the FIRST write already
-    * derives the partition column and every read prunes from
-    * source-column predicates — `CREATE TABLE ... PARTITIONED BY
-    * (months(ts))` binds here. Returns the partition column name. */
-  def declareGenerated(
-      spark: SparkSession, dir: String, srcCol: String, gen: PartGen,
-      partName: String = ""): String = {
-    val name = if (partName.nonEmpty) partName else s"part_${gen.name}"
-    declareGen(spark, dir, srcCol, gen, name)
-    name
-  }
-
-  /** [[commit]] with a GENERATED partition column: derives
-    * `partName` = gen(srcCol) (kept in the data, the Delta
-    * generated-column convention) and records the rule so
-    * [[readWhereSrc]] / [[mergeGenerated]] can own the mapping.
-    * Rows with a NULL source value have a NULL partition value and are
-    * dropped by [[commit]]'s existing contract — route them through an
-    * expectations quarantine upstream if they must not be lost. */
-  def commitGenerated(
-      spark: SparkSession, dir: String, df: DataFrame, srcCol: String,
-      gen: PartGen, partName: String = "", statsCols: Seq[String] = Nil,
-      at: String = "", bloomCols: Seq[String] = Nil,
-      bloomBits: Long = DefaultBloomBits): Long = {
-    val name = if (partName.nonEmpty) partName else s"part_${gen.name}"
-    declareGen(spark, dir, srcCol, gen, name)
-    commit(spark, dir, df.withColumn(name, gen.expr(col(srcCol))), name,
-      statsCols, at, bloomCols, bloomBits)
-  }
-
-  /** [[merge]] into a generated table: the partition column is derived
-    * from the declared rule, so CDC producers ship only source columns
-    * and can never route a row to a partition its source value
-    * contradicts. */
-  def mergeGenerated(
-      spark: SparkSession, dir: String, changes: DataFrame, keyCol: String,
-      opCol: String = "op", statsCols: Seq[String] = Nil,
-      allowSchemaEvolution: Boolean = false, at: String = "",
-      bloomCols: Seq[String] = Nil, bloomBits: Long = DefaultBloomBits,
-      sinceVersion: Option[Long] = None): Long = {
-    val (srcCol, gen, name) = generatedBy(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"PartitionedTable: no generation rule declared under $dir — " +
-          "use merge() with an explicit partition column"))
-    // spec-evolution guard: key identity is (partition, key), and the
-    // merge derives partitions with the CURRENT rule — a change row
-    // whose key still lives in a PRE-EVOLUTION partition would land as
-    // a duplicate next to the stale row instead of replacing it. Any
-    // batch row whose OLD-rule rendering names a still-live partition
-    // is therefore refused loud (batch-sized distinct per old epoch,
-    // driver-side): migrate those partitions to the current rule first
-    // (overwrite/compact them), or merge with an explicit partition
-    // column. Evolution targets append-shaped tables.
-    val epochs = genEpochsOf(spark, dir)
-    if (epochs.size > 1) {
-      val liveVals = partitionValues(spark, dir).toSet
-      epochs.dropRight(1).foreach { old =>
-        val clash = changes.select(old.expr(col(srcCol)).as("p")).distinct()
-          .collect().map(_.getString(0))
-          .filter(p => p != null && liveVals.contains(p))
-        require(clash.isEmpty,
-          s"PartitionedTable: keyed merge into evolved table $dir would " +
-            s"shadow pre-evolution partition(s) ${clash.sorted.mkString(", ")} " +
-            s"(rule ${old.name}) — migrate them to the current rule " +
-            s"(${gen.name}) before keyed merges, or merge with an explicit " +
-            "partition column")
-      }
-    }
-    merge(spark, dir, changes.withColumn(name, gen.expr(col(srcCol))),
-      keyCol, name, opCol, statsCols, allowSchemaEvolution, at,
-      bloomCols = bloomCols, bloomBits = bloomBits,
-      sinceVersion = sinceVersion)
-  }
-
-  /** Source-column range probe over a generated table: maps [lo, hi]
-    * (ISO-rendered literals) through the declared truncation to a
-    * partition-value range, keeps only manifest partitions inside it
-    * (driver-side, manifest-sized), and delegates to [[readWhereAll]]
-    * so file-level stats sidecars on the source column prune WITHIN
-    * the kept partitions and the residual predicate keeps the result
-    * exact. Zero in-range partitions fold to an empty scan. */
-  def readWhereSrc(
-      spark: SparkSession, dir: String, lo: String, hi: String,
-      asOf: Option[Long] = None): DataFrame = {
-    require(lo <= hi, s"readWhereSrc: lo '$lo' must be <= hi '$hi'")
-    val (srcCol, gen, _) = generatedBy(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"PartitionedTable: no generation rule declared under $dir — " +
-          "use readWhere/readWhereAll with explicit partValues"))
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"PartitionedTable: no committed manifests under $dir")
-    val v = asOf.getOrElse(vs.max)
-    val m = manifest(spark, dir, v)
-    // spec evolution: each partition range-maps under ITS OWN epoch's
-    // rule (a month value tested against a day-rule bound would prune
-    // boundary months that still hold in-range days); single-epoch
-    // tables take the one-rule path unchanged
-    val epochs = genEpochsOf(spark, dir)
-    val live = m.keysIterator.map(n =>
-      ExternalCatalogUtils.unescapePathName(n.stripPrefix(s"$PartDir=")))
-      .filter { p =>
-        val g = epochRuleOf(epochs, p)
-        utf8Le(g.ofLiteral(lo), p) && utf8Le(p, g.ofLiteral(hi))
-      }.toSeq.sorted
-    // the source column's stored type from donor footers, tried LAZILY
-    // across live slices (the readEq protocol) — never a full-table
-    // schema merge (mergeSchema over every partition would cost
-    // O(#partitions) footer reads on EVERY probe, defeating the
-    // pruning this read exists for). The generated source column is
-    // present since table creation, so the first slice donates in
-    // practice; the iteration only matters for evolved layouts.
-    val cloneSrc = cloneSrcOf(spark, dir)
-    require(m.nonEmpty, s"PartitionedTable: table version $v is empty under $dir")
-    val srcType = donorTypesOf(spark, dir, m, cloneSrc, Seq(srcCol))(srcCol)
-      .getOrElse(throw new IllegalArgumentException(
-        s"PartitionedTable: generated source column $srcCol missing " +
-          s"from every live partition footer of $dir at v=$v"))
-    val pred = col(srcCol) >= lit(lo).cast(srcType) &&
-      col(srcCol) <= lit(hi).cast(srcType)
-    if (live.isEmpty) // rare: nothing in range — schema-only full read
-      read(spark, dir, Some(v)).filter(lit(false)).filter(pred)
-    else readWhereAll(spark, dir,
-      Seq((srcCol, lit(lo).cast(srcType), lit(hi).cast(srcType))),
-      partValues = Some(live), asOf = Some(v))
-  }
-
   // ---------------------------------------------------------------------
-  // MULTI-LEVEL partition specs: partition by N generated levels at once
+  // Level specs: a generated table partitions by N >= 1 generated levels
   // (the reference's bronze layout is year/month/day,
-  // ingestToBronze.py:79-84; Iceberg calls this a partition spec). The
-  // substrate stays single-level — each combination is ONE manifest
-  // entry whose value is the '/'-joined level rendering — so every
-  // existing mechanism (merges, DVs, clones, retention, history) works
-  // on multi-level tables unchanged, while reads prune the manifest
-  // PER LEVEL: a source-range predicate on any level's source column
-  // keeps only combinations whose rendering at that level is in range,
-  // and predicates on several levels compose by intersection. At 100 TB
-  // the cost model is the single-level one: pruning is a driver-side
-  // pass over manifest KEYS (never a listing), then stats sidecars
-  // prune files within surviving combinations.
+  // ingestToBronze.py:79-84; Iceberg calls this a partition spec; the
+  // warehouse fact is the N = 1 case, flight month). The substrate keeps
+  // ONE partition column: a one-level spec partitions by the level's own
+  // column, and N >= 2 levels by a composite column whose value is
+  // the '/'-joined level rendering ([[partColOf]] owns that decision) —
+  // so every existing mechanism (merges, DVs, clones, retention,
+  // history) works on generated tables unchanged, while reads prune the
+  // manifest PER LEVEL: a source-range predicate on any level's source
+  // column keeps only partitions whose rendering at that level is in
+  // range, and predicates on several levels compose by intersection. At
+  // 100 TB pruning is a driver-side pass over manifest KEYS (never a
+  // listing), then stats sidecars prune files within surviving
+  // partitions.
   // ---------------------------------------------------------------------
 
-  /** One level of a multi-level spec: `name` = gen(srcCol). */
+  /** One level of a level spec: `name` = gen(srcCol). */
   final case class GenLevel(srcCol: String, gen: PartGen, name: String)
 
-  /** The derived composite partition column's name. */
+  /** The derived composite partition column's name (specs of N >= 2
+    * levels). */
   val LevelsPartName = "part_levels"
+
+  /** The physical partition column of a level spec: a one-level spec
+    * partitions by the level's own column (no composite is written),
+    * N >= 2 levels by the '/'-joined [[LevelsPartName]] composite. */
+  private[graft] def partColOf(levels: Seq[GenLevel]): String =
+    if (levels.size == 1) levels.head.name else LevelsPartName
+
+  /** Every column a level spec derives on write: the level columns and
+    * the partition column. */
+  private[graft] def derivedColsOf(levels: Seq[GenLevel]): Set[String] =
+    levels.map(_.name).toSet + partColOf(levels)
+
+  /** The partition value's per-level segments. One level's whole value
+    * is its segment (a prefix rendering may contain '/'); composites
+    * never do (refused at write). */
+  private def segmentsOf(levels: Seq[GenLevel], p: String): Array[String] =
+    p.split("/", levels.length)
 
   private val LevelsGenFile = "_gen_levels"
   private def levelsGenPath(dir: String): Path =
@@ -3049,8 +2808,9 @@ object PartitionedTable {
 
   // per-level spec evolution: `_gen_levels.evolve.N` files (N >= 1),
   // each naming (level, new rule); the base `_gen_levels` file is epoch
-  // 0 of every level and never rewritten — the evolveGenRule pattern,
-  // one append-only chain shared across levels
+  // 0 of every level and never rewritten, so the chain is append-only
+  // (one chain shared across levels) and a crash mid-evolve leaves the
+  // prior epoch current (the constraint-catalog pattern)
   private val LevelsEvolvePrefix = "_gen_levels.evolve."
 
   private def levelEvolutions(
@@ -3091,16 +2851,22 @@ object PartitionedTable {
       }
     }
 
-  /** SPEC EVOLUTION on ONE level of a multi-level table — the
+  /** SPEC EVOLUTION on ONE level (the Iceberg semantic) — e.g. the
     * reference's bronze `year/month/day` layout evolved to a finer or
     * coarser granularity at one level, zero data movement: existing
-    * combinations keep their old-rule segment, subsequent writes derive
-    * the level with the new rule, and [[readWhereSrcLevels]] attributes
-    * each combination's SEGMENT to its own epoch before range-mapping.
-    * The [[evolveGenRule]] attribution constraint applies PER LEVEL:
-    * that level's epoch chain must be fixed-width rules with pairwise-
-    * distinct widths. KEYED merges guard against pre-evolution clashes
-    * exactly like [[mergeGenerated]] (see [[mergeLevels]]). */
+    * partitions keep their old-rule segment, subsequent writes derive
+    * the level with the new rule, and every source-range read
+    * ([[readWhereSrcLevels]], [[expirePartitions]]) attributes each
+    * partition's SEGMENT to its own epoch before range-mapping, so
+    * pruning composes across the boundary. The evolution is one
+    * appended metadata file.
+    *
+    * Attribution needs to be unambiguous, so the level's epoch chain
+    * must be fixed-width rules with pairwise-distinct widths
+    * (year/month/day are; a prefix rule is not) — refused loud
+    * otherwise. KEYED merges against a clashing pre-evolution partition
+    * are refused by [[mergeLevels]]; evolution targets append-shaped
+    * tables, the reference's bronze ingest layout. */
   def evolveGenLevel(
       spark: SparkSession, dir: String, levelName: String,
       newGen: PartGen): Unit = {
@@ -3139,8 +2905,10 @@ object PartitionedTable {
     }
   }
 
-  /** Declare (write-once, atomic) or verify the level spec — the
-    * [[declareGen]] contract: a second declaration must match. */
+  /** Declare (write-once, atomic) or verify the level spec. A second
+    * declaration must MATCH — silently repartitioning an existing table
+    * under a different spec would make every prior partition value a
+    * lie to [[readWhereSrcLevels]]. */
   private def declareGenLevels(
       spark: SparkSession, dir: String, levels: Seq[GenLevel]): Unit = {
     val hfs = VersionedStore.fs(spark, dir)
@@ -3164,20 +2932,23 @@ object PartitionedTable {
         s"refusing conflicting ${levels.map(l => s"${l.name}=${l.gen.name}(${l.srcCol})").mkString("/")}")
   }
 
-  /** Level columns + the composite value. A '/' INSIDE a rendered level
-    * would make the composite ambiguous to decompose — refused loud at
-    * write (date/prefix renderings never produce one from sane data).
-    * Any null level nulls the whole composite, riding [[commit]]'s
-    * existing null-partition-drop contract. */
+  /** Level columns + the partition column ([[withComposite]]). */
   private def withLevelCols(df: DataFrame, levels: Seq[GenLevel]): DataFrame =
     withComposite(levels.foldLeft(df)((d, l) =>
       d.withColumn(l.name, l.gen.expr(col(l.srcCol)))), levels)
 
-  /** The composite over ALREADY-PRESENT level columns — split out so
-    * the SQL write path can derive-and-VALIDATE each level column
+  /** The partition column over ALREADY-PRESENT level columns — split
+    * out so the SQL write path can derive-and-VALIDATE each level column
     * first (its check expressions survive into the composite; a
-    * re-derivation here would silently replace them). */
+    * re-derivation here would silently replace them). A one-level spec
+    * partitions by the level column itself: nothing to add. For N >= 2,
+    * a '/' INSIDE a rendered level would make the composite ambiguous to
+    * decompose — refused loud at write (date/prefix renderings never
+    * produce one from sane data). A null level (a null source value)
+    * nulls the partition value, riding [[commit]]'s existing
+    * null-partition-drop contract. */
   private[graft] def withComposite(df: DataFrame, levels: Seq[GenLevel]): DataFrame = {
+    if (levels.size == 1) return df
     val guarded = levels.map { l =>
       when(col(l.name).contains("/"), raise_error(concat(
         lit(s"PartitionedTable: level ${l.name} rendered a '/' (value "),
@@ -3189,7 +2960,14 @@ object PartitionedTable {
       when(anyNull, lit(null)).otherwise(concat_ws("/", guarded: _*)))
   }
 
-  /** [[commit]] with an N-level generated partition spec. */
+  /** [[commit]] with a generated partition spec of N >= 1 levels:
+    * derives every level column (kept in the data, the Delta
+    * generated-column convention) and the partition column, and records
+    * the spec so [[readWhereSrcLevels]] / [[mergeLevels]] can own the
+    * mapping. Rows with a NULL source value have a NULL partition value
+    * and are dropped by [[commit]]'s existing contract — route them
+    * through an expectations quarantine upstream if they must not be
+    * lost. */
   def commitLevels(
       spark: SparkSession, dir: String, df: DataFrame, levels: Seq[GenLevel],
       statsCols: Seq[String] = Nil, at: String = "",
@@ -3198,13 +2976,14 @@ object PartitionedTable {
     require(levels.map(_.name).distinct.size == levels.size,
       s"commitLevels: duplicate level names in ${levels.map(_.name)}")
     declareGenLevels(spark, dir, levels)
-    commit(spark, dir, withLevelCols(df, levels), LevelsPartName,
+    commit(spark, dir, withLevelCols(df, levels), partColOf(levels),
       statsCols, at, bloomCols, bloomBits)
   }
 
-  /** [[merge]] into a level-partitioned table: every level (and the
-    * composite) derives from the declared spec, so CDC producers ship
-    * only source columns. */
+  /** [[merge]] into a generated table: every level (and the partition
+    * column) derives from the declared spec, so CDC producers ship only
+    * source columns and can never route a row to a partition its source
+    * value contradicts. */
   def mergeLevels(
       spark: SparkSession, dir: String, changes: DataFrame, keyCol: String,
       opCol: String = "op", statsCols: Seq[String] = Nil,
@@ -3216,24 +2995,25 @@ object PartitionedTable {
         s"PartitionedTable: no level spec declared under $dir — " +
           "use merge() with an explicit partition column"))
     guardLevelShadow(spark, dir, changes)
-    merge(spark, dir, withLevelCols(changes, levels), keyCol, LevelsPartName,
+    merge(spark, dir, withLevelCols(changes, levels), keyCol, partColOf(levels),
       opCol, statsCols, allowSchemaEvolution, at,
       bloomCols = bloomCols, bloomBits = bloomBits,
       sinceVersion = sinceVersion)
   }
 
-  /** Spec-evolution guard for KEYED writes into a level table (the
-    * mergeGenerated contract, level-wise) — shared by [[mergeLevels]]
-    * and the streaming sink's upsert leg: the write derives every
-    * level with its CURRENT rule, so a change row whose key still
-    * lives in a combination rendered under ANY pre-evolution epoch mix
-    * would land as a duplicate next to the stale row. Candidate
-    * composites = the cross product of per-level epoch renderings
-    * minus the all-current one — a handful of batch-sized distinct
-    * jobs (epoch chains are short by construction); a NO-OP on
-    * never-evolved tables and non-level tables. Migrate clashing
-    * combinations first, or merge with an explicit partition column.
-    * `changes` must carry the levels' SOURCE columns. */
+  /** Spec-evolution guard for KEYED writes into a generated table —
+    * shared by [[mergeLevels]] and the streaming sink's upsert leg: key
+    * identity is (partition, key), and the write derives every level
+    * with its CURRENT rule, so a change row whose key still lives in a
+    * partition rendered under ANY pre-evolution epoch mix would land as
+    * a duplicate next to the stale row instead of replacing it.
+    * Candidate partition values = the cross product of per-level epoch
+    * renderings minus the all-current one — a handful of batch-sized
+    * distinct jobs (epoch chains are short by construction); a NO-OP on
+    * never-evolved and non-generated tables. Migrate clashing
+    * partitions to the current spec first (overwrite/compact them), or
+    * merge with an explicit partition column. `changes` must carry the
+    * levels' SOURCE columns. */
   private[graft] def guardLevelShadow(
       spark: SparkSession, dir: String, changes: DataFrame): Unit = {
     val levels = generatedLevelsOf(spark, dir).getOrElse(return)
@@ -3250,8 +3030,8 @@ object PartitionedTable {
         .collect().map(_.getString(0))
         .filter(p => p != null && liveVals.contains(p))
       require(clash.isEmpty,
-        s"PartitionedTable: keyed merge into evolved level table $dir " +
-          s"would shadow pre-evolution combination(s) " +
+        s"PartitionedTable: keyed merge into evolved table $dir " +
+          s"would shadow pre-evolution partition(s) " +
           s"${clash.sorted.mkString(", ")} (epochs " +
           s"${combo.map(_.name).mkString("/")}) — migrate them to the " +
           "current spec before keyed merges, or merge with an explicit " +
@@ -3259,22 +3039,13 @@ object PartitionedTable {
     }
   }
 
-  /** Source-column range probes over a level-partitioned table. Each
-    * `(srcCol, lo, hi)` prunes AT ITS LEVEL(S) — a combination survives
-    * only if every level whose source column is probed renders inside
-    * the mapped range — and the levels' constraints intersect. The
-    * survivors then ride [[readWhereAll]]: stats sidecars prune files
-    * within them and the full residual conjunction keeps the result
-    * exact at any pruning coarseness. ISO-rendered literals, as
-    * [[readWhereSrc]]. */
-  /** The manifest-level half of [[readWhereSrcLevels]]: live composite
-    * partition values of table version `asOf` (default newest)
-    * surviving source-column RANGE probes — each combination's segment
-    * range-maps under ITS OWN epoch's rule (the readWhereSrc
-    * attribution, applied level-wise: a month segment tested against a
-    * day-rule bound would prune boundary months that still hold
-    * in-range days); never-evolved levels take the one-rule path, and
-    * levels whose source column is not probed are unconstrained.
+  /** The manifest-level half of [[readWhereSrcLevels]]: live partition
+    * values of table version `asOf` (default newest) surviving
+    * source-column RANGE probes — each partition's segment range-maps
+    * under ITS OWN epoch's rule at its level (a month segment tested
+    * against a day-rule bound would prune boundary months that still
+    * hold in-range days); never-evolved levels take the one-rule path,
+    * and levels whose source column is not probed are unconstrained.
     * Exposed so a runtime (join-driven) prune can INTERSECT its
     * dim-key combinations with the query's own range predicates — the
     * status-filtered calendar star prunes on BOTH axes at the
@@ -3293,7 +3064,7 @@ object PartitionedTable {
       .map(n => ExternalCatalogUtils.unescapePathName(
         n.stripPrefix(s"$PartDir=")))
       .filter { comp =>
-        val parts = comp.split("/", -1)
+        val parts = segmentsOf(levels, comp)
         parts.length == levels.length && levels.indices.forall { i =>
           preds.filter(_._1 == levels(i).srcCol).forall { case (_, lo, hi) =>
             val g = epochRuleOf(chains(i), parts(i))
@@ -3303,6 +3074,15 @@ object PartitionedTable {
       }.toSeq.sorted
   }
 
+  /** Source-column range probes over a generated table: ISO-rendered
+    * `(col, lo, hi)` literals. Each probe on a level's source column
+    * prunes AT ITS LEVEL(S) — a partition survives only if every level
+    * whose source column is probed renders inside the mapped range —
+    * and the levels' constraints intersect. The survivors then ride
+    * [[readWhereAll]]: stats sidecars prune files within them and the
+    * full residual conjunction (every probe, level or not) keeps the
+    * result exact at any pruning coarseness. Zero in-range partitions
+    * fold to an empty scan. */
   def readWhereSrcLevels(
       spark: SparkSession, dir: String, preds: Seq[(String, String, String)],
       asOf: Option[Long] = None): DataFrame = {
@@ -3322,13 +3102,20 @@ object PartitionedTable {
     // pred-column stored types from donor footers, tried LAZILY across
     // live slices (the readEq protocol — an alphabetically-first donor
     // may predate a schema evolution that added a probed stats column).
-    // A column NO live footer carries holds NULL in every row by
-    // construction, and NULL never satisfies a closed range — the read
-    // folds to an empty, correctly-schemed frame rather than throwing.
+    // A column NO live footer carries yet reads its ADD COLUMN DEFAULT
+    // when one is declared: it casts to the declared type, and its
+    // predicate stays a residual over readWhereAll's default-filling
+    // read (no sidecar tracks it, so it never stats-prunes). Any other
+    // such column holds NULL in every row by construction, and NULL
+    // never satisfies a closed range — the read folds to an empty,
+    // correctly-schemed frame rather than throwing.
     val cloneSrc = cloneSrcOf(spark, dir)
     val types = donorTypesOf(spark, dir, m, cloneSrc, preds.map(_._1))
+    lazy val defaulted = addedColumnsWithDefaultsResolved(spark, dir)
+      .collect { case (n, dt, Some(_)) => n -> dt }.toMap
     val casted = preds.flatMap { case (c, lo, hi) =>
-      types(c).map(t => (c, lit(lo).cast(t), lit(hi).cast(t)))
+      types(c).orElse(defaulted.get(c))
+        .map(t => (c, lit(lo).cast(t), lit(hi).cast(t)))
     }
     if (live.isEmpty || casted.size < preds.size) {
       val base = read(spark, dir, Some(v)).filter(lit(false))
@@ -3339,16 +3126,20 @@ object PartitionedTable {
   }
 
   /** Stored [[org.apache.spark.sql.types.DataType]] of each `cols`
-    * entry, resolved by trying live slices' footers LAZILY in
-    * partition order until every column is found (one footer read in
-    * the common case) — the readEq donor protocol: after schema
-    * evolution an arbitrary single donor may lack a column other
-    * partitions carry. Columns absent from EVERY live footer resolve
-    * to None (callers decide — see [[readWhereSrcLevels]]). */
+    * entry (a CURRENT logical name: a footer written before a rename
+    * donates under any member of the name's rename chain), resolved by
+    * trying live slices' footers LAZILY in partition order until every
+    * column is found (one footer read in the common case) — the readEq
+    * donor protocol: after schema evolution an arbitrary single donor
+    * may lack a column other partitions carry. Columns absent from
+    * EVERY live footer resolve to None (callers decide — see
+    * [[readWhereSrcLevels]]). */
   private def donorTypesOf(
       spark: SparkSession, dir: String, m: Map[String, Long],
       cloneSrc: Option[String],
       cols: Seq[String]): Map[String, Option[DataType]] = {
+    val edges = colMapOf(spark, dir)
+    val members = cols.map(c => c -> chainMembersOf(edges, c).toSet).toMap
     val found = scala.collection.mutable.Map.empty[String, DataType]
     val it = m.toSeq.sortBy(_._1).iterator
     while (found.size < cols.distinct.size && it.hasNext) {
@@ -3360,7 +3151,8 @@ object PartitionedTable {
       // both the inference job and the ~77 ms per-read resolution
       val schema = readParquet(spark, Seq(vd.toString)).schema
       cols.filterNot(found.contains).foreach { c =>
-        schema.find(_.name == c).foreach(f => found(c) = f.dataType)
+        schema.find(f => members(c).contains(f.name))
+          .foreach(f => found(c) = f.dataType)
       }
     }
     cols.map(c => c -> found.get(c)).toMap
@@ -3626,7 +3418,8 @@ object PartitionedTable {
   }
 
   /** Block renames/drops of columns that persisted text references —
-    * a CHECK constraint's SQL or the generation rule — would dangle. */
+    * a CHECK constraint's SQL or any level of the generated spec (its
+    * source or derived column) — would dangle. */
   private def refuseReferencedColumn(
       spark: SparkSession, dir: String, name: String, op: String): Unit = {
     val word = ("(?<![A-Za-z0-9_])" +
@@ -3636,10 +3429,10 @@ object PartitionedTable {
         s"PartitionedTable: cannot $op column $name under $dir — CHECK " +
           s"constraint $cn ($e) references it (drop the constraint first)")
     }
-    generatedBy(spark, dir).foreach { case (src, g, pn) =>
-      require(name != src && name != pn,
+    generatedLevelsOf(spark, dir).toSeq.flatten.foreach { l =>
+      require(name != l.srcCol && name != l.name,
         s"PartitionedTable: cannot $op column $name under $dir — the " +
-          s"generation rule ${g.name}($src) -> $pn references it")
+          s"generation rule ${l.gen.name}(${l.srcCol}) -> ${l.name} references it")
     }
   }
 
@@ -3709,7 +3502,7 @@ object PartitionedTable {
       spark: SparkSession, dir: String, schema: StructType,
       partCol: String, derivedPart: Boolean = false): Unit = {
     if (derivedPart)
-      // a generation rule ([[declareGenerated]]) derives the column on
+      // a level spec ([[declareGeneratedLevels]]) derives the column on
       // every write — the declared schema carries only source columns
       require(!schema.fieldNames.contains(partCol),
         s"PartitionedTable: generated partition column $partCol must not " +
@@ -4169,7 +3962,7 @@ object PartitionedTable {
     * `approx_count_distinct`), marked `stats.mode=incremental`.
     *
     * `partCol` must be a data column (identity partitioning, or a
-    * generated/level table's DERIVED column — the engine writes those
+    * generated table's DERIVED column — the engine writes those
     * into the data). Returns the persisted stats plus two NON-persisted
     * cost receipts: `analyze.scanned_partitions` and
     * `analyze.scanned_files` (the scan's own `inputFiles` count — the
@@ -4432,10 +4225,8 @@ object PartitionedTable {
         val logical = logicalColumns(spark, dir)
         // rule-derived partition columns ride along without being
         // declared (the engine adds them on every write)
-        val genNames = generatedBy(spark, dir).map(_._3).toSet ++
-          generatedLevelsOf(spark, dir).toSeq.flatten.map(_.name) ++
-          (if (generatedLevelsOf(spark, dir).isDefined) Set(LevelsPartName)
-           else Set.empty[String])
+        val genNames =
+          generatedLevelsOf(spark, dir).map(derivedColsOf).getOrElse(Set.empty)
         require((df.columns.toSet -- genNames) == logical.toSet,
           s"PartitionedTable: first commit under $dir must carry exactly " +
             s"the declared columns [${logical.sorted.mkString(",")}]; got " +
@@ -4457,44 +4248,18 @@ object PartitionedTable {
   }
 
   /** Live partition values of table version `asOf` (default newest)
-    * that some SOURCE-column literal in `values` lands in — each
-    * partition tested under its OWN epoch's rule, so evolved tables
-    * attribute correctly (a '1996-01' month partition matches
-    * '1996-01-15'; a post-evolution '1996-02-10' day partition matches
-    * only that day). The point-set analogue of [[readWhereSrc]]'s
-    * range mapping — what a runtime (join-driven) prune of a GENERATED
-    * table needs when the dim joins on the rule's source column (the
-    * calendar-dim star shape). Driver-side: O(#live × #values) string
-    * truncations over manifest metadata. */
-  def partitionsForSourceValues(
-      spark: SparkSession, dir: String, values: Seq[String],
-      asOf: Option[Long] = None): Seq[String] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"PartitionedTable: no committed manifests under $dir")
-    val epochs = genEpochsOf(spark, dir)
-    require(epochs.nonEmpty,
-      s"PartitionedTable: no generation rule declared under $dir — " +
-        "source-value partition mapping needs one")
-    val live = manifest(spark, dir, asOf.getOrElse(vs.max)).keys.toSeq
-      .map(n => ExternalCatalogUtils.unescapePathName(
-        n.stripPrefix(s"$PartDir=")))
-    live.filter { p =>
-      val rule = epochRuleOf(epochs, p)
-      values.exists(v => rule.ofLiteral(v) == p)
-    }.sorted
-  }
-
-  /** [[partitionsForSourceValues]] for LEVEL-partitioned tables: live
-    * composite partition values of table version `asOf` (default
-    * newest) whose LEVEL(S) derived from `srcCol` render — each
-    * combination's segment tested under ITS OWN epoch's rule for that
-    * level, the [[readWhereSrcLevels]] attribution — equal to some
-    * literal in `values`. Levels deriving from other source columns
-    * are unconstrained (the join key bounds only its own level; the
-    * residual join condition above stays the exact gate). What a
-    * runtime (join-driven) prune of the reference's bronze
-    * status×year/month layout needs when a dim joins on one level's
-    * source column. Driver-side: O(#live × #values) string
+    * whose LEVEL(S) derived from `srcCol` render — each partition's
+    * segment tested under ITS OWN epoch's rule for that level, the
+    * [[readWhereSrcLevels]] attribution (a '1996-01' month segment
+    * matches '1996-01-15'; a post-evolution '1996-02-10' day segment
+    * matches only that day) — equal to some literal in `values`. The
+    * point-set analogue of the range mapping. Levels deriving from
+    * other source columns are unconstrained (the join key bounds only
+    * its own level; the residual join condition above stays the exact
+    * gate). What a runtime (join-driven) prune of a generated table
+    * needs when a dim joins on a level's source column — the
+    * calendar-dim star shape, or the reference's bronze
+    * status×year/month layout. Driver-side: O(#live × #values) string
     * truncations over manifest metadata. */
   def partitionsForSourceValuesLevels(
       spark: SparkSession, dir: String, srcCol: String, values: Seq[String],
@@ -4504,7 +4269,7 @@ object PartitionedTable {
     val levels = generatedLevelsOf(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"PartitionedTable: no level spec declared under $dir — " +
-          "use partitionsForSourceValues for single-rule tables"))
+          "source-value partition mapping needs one"))
     val idxs = levels.indices.filter(i => levels(i).srcCol == srcCol)
     require(idxs.nonEmpty,
       s"PartitionedTable: no level of $dir derives from '$srcCol' " +
@@ -4514,7 +4279,7 @@ object PartitionedTable {
       .map(n => ExternalCatalogUtils.unescapePathName(
         n.stripPrefix(s"$PartDir=")))
       .filter { comp =>
-        val parts = comp.split("/", -1)
+        val parts = segmentsOf(levels, comp)
         parts.length == levels.length && idxs.forall { i =>
           val g = epochRuleOf(chains(i), parts(i))
           values.exists(v => g.ofLiteral(v) == parts(i))
@@ -4552,8 +4317,8 @@ object PartitionedTable {
     fact.join(broadcast(d), Seq(factPartCol))
   }
 
-  /** Partition-level retention on a GENERATED table: drop every
-    * partition whose generated value sorts strictly BELOW
+  /** Partition-level retention on a ONE-LEVEL generated table: drop
+    * every partition whose generated value sorts strictly BELOW
     * `gen(cutoff)` — one manifest commit, zero data movement (the
     * stores become unreferenced and [[vacuum]] collects them later).
     * This is what retention actually costs at 100 TB: dropping a
@@ -4568,10 +4333,13 @@ object PartitionedTable {
   def expirePartitions(
       spark: SparkSession, dir: String, cutoff: String,
       at: String = ""): Seq[String] = {
-    val (_, gen, _) = generatedBy(spark, dir).getOrElse(
+    val chains = levelEpochsOf(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"PartitionedTable: no generation rule declared under $dir — " +
           "retention needs the partition-value ordering a rule defines"))
+    require(chains.size == 1,
+      s"PartitionedTable: retention needs a one-level spec under $dir " +
+        s"(have ${chains.size} levels — composite values have no cutoff order)")
     val cur = latest(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"PartitionedTable: nothing to expire under $dir"))
@@ -4579,12 +4347,10 @@ object PartitionedTable {
     // spec evolution: the cutoff renders under each partition's OWN
     // epoch (a month partition tested against a day-rule bound would
     // drop the boundary month whose tail days survive the cutoff)
-    val epochs = genEpochsOf(spark, dir)
-    val _ = gen // the current rule still gates that a rule exists
     val dropped = m.keys.toSeq.map(n =>
       ExternalCatalogUtils.unescapePathName(n.stripPrefix(s"$PartDir=")))
       .filter { p =>
-        val bound = epochRuleOf(epochs, p).ofLiteral(cutoff)
+        val bound = epochRuleOf(chains.head, p).ofLiteral(cutoff)
         utf8Le(p, bound) && p != bound
       }
       .sorted
@@ -5285,8 +5051,8 @@ object PartitionedTable {
     // Generated partition columns, hash-gated: commit orders
     // partitioned by the DERIVED month of o_orderdate (the rule is
     // recorded table-side, write-once), then probe a SOURCE-column
-    // date range through readWhereSrc — the engine maps the range to
-    // month partitions via the monotone truncation, prunes the
+    // date range through readWhereSrcLevels — the engine maps the
+    // range to month partitions via the monotone truncation, prunes the
     // manifest driver-side, and keeps the residual predicate, so the
     // hash must equal DuckDB filtering the source directly. Both probe
     // bounds fall MID-month, so a mapping that prunes the boundary
@@ -5310,8 +5076,9 @@ object PartitionedTable {
       // no stats sidecar: the gate exercises manifest-level generated
       // pruning + residual; stats composition inside kept partitions
       // is spec'd in PartitionedTableSpec (saves the commit a 2nd job)
-      commitGenerated(s, store, orders, "o_orderdate", PartGen.Month)
-      readWhereSrc(s, store, "1995-03-05", "1995-05-20")
+      commitLevels(s, store, orders,
+        Seq(GenLevel("o_orderdate", PartGen.Month, "part_month")))
+      readWhereSrcLevels(s, store, Seq(("o_orderdate", "1995-03-05", "1995-05-20")))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_rows"),
           round(sum("o_totalprice"), 2).as("rev"))
@@ -5481,7 +5248,8 @@ object PartitionedTable {
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
         .withColumn("part_month", date_format(col("o_orderdate"), "yyyy-MM"))
         .repartition(col("part_month")) // one writer slice per month
-      commitGenerated(s, store, orders, "o_orderdate", PartGen.Month)
+      commitLevels(s, store, orders,
+        Seq(GenLevel("o_orderdate", PartGen.Month, "part_month")))
       val dropped = expirePartitions(s, store, "1995-07-15")
       read(s, store)
         .withColumn("n_dropped", lit(dropped.size))
@@ -5744,14 +5512,14 @@ object PartitionedTable {
       val orders = Tables.orders(s, dir).select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
       val cut = to_date(lit("1996-01-01"))
-      commitGenerated(s, store, orders.filter(col("o_orderdate") < cut),
-        "o_orderdate", PartGen.Year, "pd")
-      evolveGenRule(s, store, PartGen.Month)
-      mergeGenerated(s, store,
+      commitLevels(s, store, orders.filter(col("o_orderdate") < cut),
+        Seq(GenLevel("o_orderdate", PartGen.Year, "pd")))
+      evolveGenLevel(s, store, "pd", PartGen.Month)
+      mergeLevels(s, store,
         orders.filter(col("o_orderdate") >= cut)
           .withColumn("op", lit("upsert")),
         "o_orderkey")
-      readWhereSrc(s, store, "1995-03-15", "1996-10-05")
+      readWhereSrcLevels(s, store, Seq(("o_orderdate", "1995-03-15", "1996-10-05")))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_rows"),
           round(sum("o_totalprice"), 2).as("rev"))

@@ -150,25 +150,28 @@ object Warehouse {
     * through graft SQL. Each warehouse table commits as a
     * partition-scoped versioned table under `$warehousePath/graft/` and
     * registers as `graft.warehouse.<t>`: the fact partitions by flight
-    * MONTH through the generated rule (star queries with date ranges
-    * manifest-prune, and the layout survives fact growth), dims by year
+    * MONTH through a one-level generated spec (star queries with date
+    * ranges manifest-prune, and the layout survives fact growth), dims by year
     * / code prefix (tiny, but a partitioned substrate is the uniform
     * contract). Full-refresh commits: content-idempotent per re-run,
     * with table history as a bonus the Hive mirror never had. */
   def registerGraft(spark: SparkSession, warehousePath: String): Unit = {
     import graft.operators.PartitionedTable
-    import graft.operators.PartitionedTable.PartGen
+    import graft.operators.PartitionedTable.{GenLevel, PartGen}
     import graft.sources.GraftCatalog
     val root = s"$warehousePath/graft"
-    PartitionedTable.commitGenerated(spark, s"$root/dim_date",
-      spark.table("warehouse.dim_date"), "day", PartGen.Year, "py")
-    PartitionedTable.commitGenerated(spark, s"$root/dim_airline",
-      spark.table("warehouse.dim_airline"), "code", PartGen.Prefix(1), "pc")
-    PartitionedTable.commitGenerated(spark, s"$root/dim_airport",
-      spark.table("warehouse.dim_airport"), "code", PartGen.Prefix(1), "pc")
-    PartitionedTable.commitGenerated(spark, s"$root/fact_flight_activites",
+    PartitionedTable.commitLevels(spark, s"$root/dim_date",
+      spark.table("warehouse.dim_date"), Seq(GenLevel("day", PartGen.Year, "py")))
+    PartitionedTable.commitLevels(spark, s"$root/dim_airline",
+      spark.table("warehouse.dim_airline"),
+      Seq(GenLevel("code", PartGen.Prefix(1), "pc")))
+    PartitionedTable.commitLevels(spark, s"$root/dim_airport",
+      spark.table("warehouse.dim_airport"),
+      Seq(GenLevel("code", PartGen.Prefix(1), "pc")))
+    PartitionedTable.commitLevels(spark, s"$root/fact_flight_activites",
       spark.table("warehouse.fact_flight_activites"),
-      "flightDate", PartGen.Month, "pm", statsCols = Seq("flightDate"))
+      Seq(GenLevel("flightDate", PartGen.Month, "pm")),
+      statsCols = Seq("flightDate"))
     GraftCatalog.register(spark, "warehouse", "dim_date",
       s"$root/dim_date", partCol = Some("py"))
     GraftCatalog.register(spark, "warehouse", "dim_airline",

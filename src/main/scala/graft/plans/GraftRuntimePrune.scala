@@ -90,9 +90,8 @@ case class GraftRuntimePrune() extends Rule[LogicalPlan] with PredicateHelper {
 
   /** The fact-side scan relation exporting attribute `a` as a
     * PRUNABLE column — its partition column, or (for a generated
-    * table, single-rule or multi-level) a generation rule's SOURCE
-    * column, the calendar-dim star shape — not already carrying an
-    * obligation ON THAT COLUMN (a second dim on a DIFFERENT axis
+    * table) any level's SOURCE column, the calendar-dim star shape —
+    * not already carrying an obligation ON THAT COLUMN (a second dim on a DIFFERENT axis
     * appends; re-pruning the same axis is wasted IO). The returned
     * option is [[GraftRuntimePruneSpec.srcCol]]: None =
     * partition-keyed, Some = source-keyed.
@@ -146,17 +145,14 @@ case class GraftRuntimePrune() extends Rule[LogicalPlan] with PredicateHelper {
         else {
           // generated table joined on a SOURCE column — one manifest-dir
           // metadata read at optimize time, only reached when a graft
-          // scan matched the key's exprId. Multi-level tables admit any
-          // level's source column (the status×year star shape).
+          // scan matched the key's exprId. Any level's source column
+          // qualifies (the status×year star shape).
           val spark = SparkSession.active
           val sourceCols: Set[String] =
-            try {
-              val levels = graft.operators.PartitionedTable
-                .generatedLevelsOf(spark, gs.spec.dir)
-              levels.map(_.map(_.srcCol).toSet).getOrElse(
-                graft.operators.PartitionedTable
-                  .generatedBy(spark, gs.spec.dir).map(_._1).toSet)
-            } catch { case scala.util.control.NonFatal(_) => Set.empty }
+            try graft.operators.PartitionedTable
+              .generatedLevelsOf(spark, gs.spec.dir)
+              .toSeq.flatten.map(_.srcCol).toSet
+            catch { case scala.util.control.NonFatal(_) => Set.empty }
           if (sourceCols.contains(a.name)) Some(Some(a.name)) else None
         }
       srcColOpt.collect {

@@ -279,10 +279,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       "graft catalog: CREATE TABLE needs PARTITIONED BY (<column> | " +
         "years/months/days(<column>) | truncate(<column>, n), ...)")
     // Iceberg-style hidden-partitioning transforms bind to the
-    // generated-rule machinery: partition columns are DERIVED on every
-    // write and readers prune from SOURCE-column predicates. One
-    // transform → a single-rule generated table; several → a
-    // multi-level spec (the reference's year/month bronze layout).
+    // generated-partition machinery: partition columns are DERIVED on
+    // every write and readers prune from SOURCE-column predicates. N
+    // transforms → a level spec of N levels (months(ts) alone is the
+    // N = 1 case; the reference's year/month bronze layout is N = 2).
     def srcOf(tr: Transform): String = {
       require(tr.references.length == 1 &&
         tr.references.head.fieldNames.length == 1,
@@ -369,12 +369,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         val ref = srcOf(tr)
         PartitionedTable.createEmpty(spark, dir, schema, ref)
         ref
-      case Seq((_, Some((ref, gen)))) => // one rule: generated table
-        val name = s"part_${gen.name}"
-        PartitionedTable.createEmpty(spark, dir,
-          stripDerived(schema, Seq(name)), name, derivedPart = true)
-        PartitionedTable.declareGenerated(spark, dir, ref, gen, name)
-      case many => // several rules: a multi-level spec
+      case many => // transforms: a generated level spec, one per rule
         require(many.forall(_._2.isDefined),
           "graft catalog: multi-column PARTITIONED BY takes transforms " +
             "only (years/months/days/truncate) — a plain column level " +
@@ -386,12 +381,13 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
               s"${base}_$i" else base
             PartitionedTable.GenLevel(ref, gen, name)
         }
+        val pc = PartitionedTable.partColOf(levels)
         PartitionedTable.createEmpty(spark, dir,
           stripDerived(schema,
-            levels.map(_.name) :+ PartitionedTable.LevelsPartName),
-          PartitionedTable.LevelsPartName, derivedPart = true)
+            PartitionedTable.derivedColsOf(levels).toSeq),
+          pc, derivedPart = true)
         PartitionedTable.declareGeneratedLevels(spark, dir, levels)
-        PartitionedTable.LevelsPartName
+        pc
     }
     GraftTableSpec(dir, Some(pc), keyCol)
   }
@@ -719,10 +715,10 @@ object GraftCatalog {
     // probe with the predicate users actually write — WHERE
     // o_orderdate BETWEEN two MID-month instants, via spark.sql. The
     // catalog scan routes the pushed closed range through
-    // readWhereSrc, so the manifest keeps only in-range months (the
-    // dirs-opened claim is plan-asserted in GraftCatalogSpec, evolved
-    // tables included) while the residual keeps the mid-month bounds
-    // exact. The oracle filters the source directly — a catalog that
+    // readWhereSrcLevels (a one-level spec), so the manifest keeps only
+    // in-range months (the dirs-opened claim is plan-asserted in
+    // GraftCatalogSpec, evolved tables included) while the residual
+    // keeps the mid-month bounds exact. The oracle filters the source directly — a catalog that
     // loses the source-range mapping (falling back to a full scan
     // would still hash right, so the SPEC pins the pruning; this gate
     // pins exactness through the SQL path).
@@ -748,8 +744,9 @@ object GraftCatalog {
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
         .filter(col("o_orderdate") >= to_date(lit("1996-01-01")) &&
           col("o_orderdate") < to_date(lit("1997-01-01")))
-      PartitionedTable.commitGenerated(s, store, orders, "o_orderdate",
-        PartitionedTable.PartGen.Month, "pm",
+      PartitionedTable.commitLevels(s, store, orders, Seq(
+        PartitionedTable.GenLevel("o_orderdate",
+          PartitionedTable.PartGen.Month, "pm")),
         statsCols = Seq("o_orderdate"))
       register(s, "lake", tbl, store, partCol = Some("pm"))
       }
@@ -1074,7 +1071,7 @@ object GraftCatalog {
     // generated-rule machinery — the INSERT ships only source columns
     // (the engine derives part_month), and the probe is the predicate
     // users actually write: WHERE o_orderdate BETWEEN two mid-month
-    // instants, pruned at the manifest through readWhereSrc (the
+    // instants, pruned at the manifest through readWhereSrcLevels (the
     // dirs-opened claim is plan-asserted in GraftDdlSpec). The oracle
     // recomputes the window closed-form from orders, so a transform
     // that mis-derives the partition, a first-commit that drops rows,
@@ -1658,19 +1655,14 @@ class GraftTable(ident: String, spec: GraftTableSpec, version: Long)
     // a rule-DERIVED partition column stays nullable: NULL means
     // "derive" on writes (the generated-column contract), so marking
     // it non-null would reject the column-list INSERT form upstream
-    val derived =
-      PartitionedTable.generatedBy(spark, spec.dir).map(_._3).toSet ++
-        PartitionedTable.generatedLevelsOf(spark, spec.dir)
-          .toSeq.flatten.map(_.name) +
-        PartitionedTable.LevelsPartName
+    val levels = PartitionedTable.generatedLevelsOf(spark, spec.dir)
+    val derived = levels.map(PartitionedTable.derivedColsOf)
+      .getOrElse(Set.empty)
     // the rule's SOURCE column is non-null instead: committed rows
     // never carry one (null-source rows have a null partition, refused
     // at the landing), and it doubles as the row-identity column for
     // the row-level commands on generated tables
-    val genSrc =
-      PartitionedTable.generatedBy(spark, spec.dir).map(_._1).toSet ++
-        PartitionedTable.generatedLevelsOf(spark, spec.dir)
-          .toSeq.flatten.map(_.srcCol)
+    val genSrc = levels.toSeq.flatten.map(_.srcCol).toSet
     // column DEFAULTs (and any other declared field metadata) live on
     // the CREATE schema; the footer-merged data schema strips metadata,
     // so re-overlay it by name — an INSERT omitting a DEFAULT column
@@ -1748,11 +1740,7 @@ class GraftTable(ident: String, spec: GraftTableSpec, version: Long)
     PartitionedTable.generatedLevelsOf(spark, spec.dir) match {
       case Some(levels) =>
         levels.map(l => transformOf(l.srcCol, l.gen)).toArray
-      case None =>
-        PartitionedTable.generatedBy(spark, spec.dir) match {
-          case Some((src, gen, _)) => Array(transformOf(src, gen))
-          case None => spec.partCol.map(c => Expressions.identity(c)).toArray
-        }
+      case None => spec.partCol.map(c => Expressions.identity(c)).toArray
     }
   }
 
@@ -1780,7 +1768,7 @@ class GraftTable(ident: String, spec: GraftTableSpec, version: Long)
   // ---- SupportsPartitionManagement: SHOW PARTITIONS + ALTER TABLE
   // DROP PARTITION over the manifest. Partition VALUES are strings by
   // the commit contract (identity part cols are required string;
-  // generated/level tables render their combination strings), so the
+  // generated tables render their level or combination strings), so the
   // partition schema is the one string column and identifiers are its
   // values verbatim. A DROP is the library's metadata-only
   // dropPartitions commit — no file is touched, time travel keeps the
@@ -1891,7 +1879,7 @@ case class GraftRuntimePruneSpec(
     dimPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
     keyExpr: org.apache.spark.sql.catalyst.expressions.Expression,
     /** Some(col) = the join key is a generation rule's SOURCE column
-      * `col` (single-rule table, or ANY level of a multi-level one):
+      * `col` (ANY level of a generated table's level spec):
       * the resolved dim values map through each live partition's own
       * epoch rule at that column's level(s) — the calendar-dim star
       * shape — instead of matching partition values verbatim. */
@@ -2173,15 +2161,16 @@ case class GraftScan(
     val closed = dataCols.collect {
       case (c, Some(lo), Some(hi), eq) => (c, lo, hi, eq)
     }.sortBy(_._1)
-    // GENERATED tables prune from SOURCE-column predicates (nobody
-    // writes WHERE part_month = '1996-01' — they write WHERE
-    // o_orderdate BETWEEN …): closed ranges on declared level/rule
-    // source columns route through readWhereSrc/readWhereSrcLevels,
-    // which map the range through each epoch's/level's own rule at the
-    // manifest, then stats-prune files and keep the exact residual.
-    // Values render to the rules' ISO literal form; guarded so a
-    // rendering that breaks lexicographic order falls through to the
-    // generic path (residuals keep every path exact).
+    // GENERATED tables (a level spec of N >= 1 levels) prune from
+    // SOURCE-column predicates (nobody writes WHERE part_month =
+    // '1996-01' — they write WHERE o_orderdate BETWEEN …): closed ranges
+    // on the levels' source columns route through readWhereSrcLevels,
+    // which maps each range through its level's own epoch rules at the
+    // manifest, then stats-prunes files and keeps the exact residual.
+    // Values render to the rules' ISO literal form; a pred whose
+    // rendering breaks lexicographic order, or a binary value (no
+    // string rendering casts back to it), stays out of the routed read
+    // (the residual keeps every path exact).
     def render(v: Any): String = v match {
       case t: java.sql.Timestamp => t.toString
       case d: java.sql.Date => d.toString
@@ -2189,29 +2178,18 @@ case class GraftScan(
       case d: java.time.LocalDate => d.toString
       case other => other.toString
     }
-    val genLevels = PartitionedTable.generatedLevelsOf(spark, dir)
-      .getOrElse(Nil)
-    val genSingle =
-      if (genLevels.nonEmpty) None
-      else PartitionedTable.generatedBy(spark, dir)
-    val levelSrc = genLevels.map(_.srcCol).toSet
-    val renderedLevels: Seq[(String, String, String)] =
-      if (genLevels.isEmpty) Nil
-      else closed.map { case (c, lo, hi, _) => (c, render(lo), render(hi)) }
+    val levelSrc = PartitionedTable.generatedLevelsOf(spark, dir)
+      .toSeq.flatten.map(_.srcCol).toSet
+    val rendered: Seq[(String, String, String)] =
+      if (levelSrc.isEmpty) Nil
+      else closed.collect {
+        case (c, lo, hi, _) if !lo.isInstanceOf[Array[Byte]] =>
+          (c, render(lo), render(hi))
+      }.filter(p => p._2 <= p._3)
     val genRouted: Option[DataFrame] =
-      if (genLevels.nonEmpty) {
-        if (renderedLevels.exists(p => levelSrc.contains(p._1)) &&
-            renderedLevels.forall(p => p._2 <= p._3))
-          Some(PartitionedTable.readWhereSrcLevels(spark, dir, renderedLevels,
-            Some(version)))
-        else None
-      } else genSingle.flatMap { case (srcCol, _, _) =>
-        closed.find(_._1 == srcCol).collect {
-          case (_, lo, hi, _) if render(lo) <= render(hi) =>
-            PartitionedTable.readWhereSrc(spark, dir, render(lo), render(hi),
-              Some(version))
-        }
-      }
+      if (!rendered.exists(p => levelSrc.contains(p._1))) None
+      else Some(PartitionedTable.readWhereSrcLevels(spark, dir, rendered,
+        Some(version)))
     // partition constraint: STATIC pushed equalities ∩ RUNTIME dim join
     // keys (one set per resolved pruning obligation, INTERSECTED — the
     // two-dim star prunes on every axis a dim qualified on) ∩ what
@@ -2229,12 +2207,8 @@ case class GraftScan(
       runtimePrune.zip(resolvedRuntimeValuesAll).map {
         case (rp, resolved) if rp.sourceKey =>
           resolved.flatMap { vals =>
-            try Some(
-              if (genLevels.nonEmpty)
-                PartitionedTable.partitionsForSourceValuesLevels(
-                  spark, dir, rp.srcCol.get, vals, Some(version))
-              else PartitionedTable.partitionsForSourceValues(
-                spark, dir, vals, Some(version)))
+            try Some(PartitionedTable.partitionsForSourceValuesLevels(
+              spark, dir, rp.srcCol.get, vals, Some(version)))
             catch { case scala.util.control.NonFatal(_) => None }
           }
         case (_, resolved) if genRouted.isEmpty => resolved
@@ -2246,11 +2220,10 @@ case class GraftScan(
     // rendering breaks lexicographic order drop out — sound, the
     // residual keeps them exact.
     val rangeSet: Option[Seq[String]] =
-      if (genLevels.nonEmpty && obligationSets.zip(runtimePrune).exists {
+      if (obligationSets.zip(runtimePrune).exists {
         case (s, rp) => rp.sourceKey && s.isDefined
       }) {
-        val rangePreds = renderedLevels.filter(p =>
-          levelSrc.contains(p._1) && p._2 <= p._3)
+        val rangePreds = rendered.filter(p => levelSrc.contains(p._1))
         if (rangePreds.isEmpty) None
         else try Some(PartitionedTable.partitionsForSourceRangesLevels(
           spark, dir, rangePreds, Some(version)))

@@ -249,9 +249,7 @@ object GraftProcedures {
       // silently diverging the layout contract
       val srcDerived: Set[String] =
         PartitionedTable.generatedLevelsOf(spark, spec.dir)
-          .map(ls => ls.map(_.name).toSet + PartitionedTable.LevelsPartName)
-          .getOrElse(
-            PartitionedTable.generatedBy(spark, spec.dir).map(_._3).toSet)
+          .map(PartitionedTable.derivedColsOf).getOrElse(Set.empty)
       val srcSchema = org.apache.spark.sql.types.StructType(
         src.schema().fields.filterNot(f => srcDerived.contains(f.name)))
       // the catalog's own CREATE path: binds transforms, strips derived

@@ -106,9 +106,9 @@ class GraftStreamingWrite(
           PartitionedTable.commitStream(spark, spec.dir, prepared, pc,
             queryId, epochId): Unit
         else {
-          // keyed upserts into a LEVEL table inherit the batch
+          // keyed upserts into a GENERATED table inherit the batch
           // mergeLevels contract: a mid-stream spec evolution must not
-          // let a batch shadow a pre-evolution combination — fail the
+          // let a batch shadow a pre-evolution partition — fail the
           // epoch loud (no-op on never-evolved tables)
           PartitionedTable.guardLevelShadow(spark, spec.dir, prepared)
           PartitionedTable.mergeStream(spark, spec.dir,

@@ -66,9 +66,9 @@ object GraftWrites {
         col(name).cast("string"))))
 
   /** Resolve the physical partition column for a catalog write and
-    * derive-and-validate generated columns: level tables check every
-    * level column and recompute the composite; generated tables check
-    * the derived column; plain tables use the registered partCol. */
+    * derive-and-validate generated columns: generated tables check
+    * every level column and recompute the partition column; plain
+    * tables use the registered partCol. */
   private[sources] def prepare(
       spark: SparkSession, spec: GraftTableSpec,
       df: DataFrame): (DataFrame, String) =
@@ -83,21 +83,13 @@ object GraftWrites {
             else l.gen.expr(col(l.srcCol))))
         (PartitionedTable.withComposite(
           checked.drop(PartitionedTable.LevelsPartName), levels),
-          PartitionedTable.LevelsPartName)
+          PartitionedTable.partColOf(levels))
       case None =>
-        PartitionedTable.generatedBy(spark, spec.dir) match {
-          case Some((src, gen, name)) =>
-            (df.withColumn(name,
-              if (df.columns.contains(name))
-                checkedGen(name, gen.expr(col(src)))
-              else gen.expr(col(src))), name)
-          case None =>
-            val pc = spec.partCol.getOrElse(
-              throw new IllegalArgumentException(
-                "graft catalog: SQL writes need the table registered with " +
-                  "its partition column (register(..., partCol = Some(...)))"))
-            (df, pc)
-        }
+        val pc = spec.partCol.getOrElse(
+          throw new IllegalArgumentException(
+            "graft catalog: SQL writes need the table registered with " +
+              "its partition column (register(..., partCol = Some(...)))"))
+        (df, pc)
     }
 
   /** Clustering columns for the write-side distribution contract: the
@@ -108,15 +100,8 @@ object GraftWrites {
   private[sources] def clusteringColumns(
       spec: GraftTableSpec, schema: StructType): Seq[String] = {
     val spark = SparkSession.active
-    val wanted =
-      PartitionedTable.generatedLevelsOf(spark, spec.dir) match {
-        case Some(levels) => levels.map(_.srcCol).distinct
-        case None =>
-          PartitionedTable.generatedBy(spark, spec.dir) match {
-            case Some((src, _, _)) => Seq(src)
-            case None => spec.partCol.toSeq
-          }
-      }
+    val wanted = PartitionedTable.generatedLevelsOf(spark, spec.dir)
+      .map(_.map(_.srcCol).distinct).getOrElse(spec.partCol.toSeq)
     wanted.filter(schema.fieldNames.contains)
   }
 
@@ -384,8 +369,7 @@ class GraftStagedTable(
       partitions.head.references.headOption
         .exists(r => spec.partCol.contains(r.fieldNames.mkString(".")))
     val isGenerated =
-      PartitionedTable.generatedBy(spark, spec.dir).isDefined ||
-        PartitionedTable.generatedLevelsOf(spark, spec.dir).isDefined
+      PartitionedTable.generatedLevelsOf(spark, spec.dir).isDefined
     require(sameIdentity && !isGenerated,
       s"graft catalog: REPLACE TABLE $ident must keep the table\'s " +
         s"partitioning (PARTITIONED BY (${spec.partCol.getOrElse("?")})); " +
@@ -467,10 +451,8 @@ class GraftStagedTable(
           PartitionedTable.read(spark, spec.dir).schema
         else PartitionedTable.emptyDeclared(spark, spec.dir).schema)
           .fields.toSeq.map(f => (f.name, f.dataType))
-      val genNames =
-        PartitionedTable.generatedBy(spark, spec.dir).map(_._3).toSet ++
-          PartitionedTable.generatedLevelsOf(spark, spec.dir)
-            .toSeq.flatten.map(_.name) + PartitionedTable.LevelsPartName
+      val genNames = PartitionedTable.generatedLevelsOf(spark, spec.dir)
+        .map(PartitionedTable.derivedColsOf).getOrElse(Set.empty)
       val declaredCols = declared.fields.toSeq.map(f => (f.name, f.dataType))
       val currentCols = current.filterNot(c => genNames.contains(c._1))
       require(declaredCols.toSet == currentCols.toSet,
@@ -506,21 +488,17 @@ class GraftRowLevelOperation(
     "graft catalog: SQL MERGE/UPDATE/DELETE need the table registered " +
       "with its key column (register(..., keyCol = Some(...))) — row " +
       "identity is (partition, key)"))
-  // generated/level tables identify rows by (key, SOURCE column(s)):
+  // generated tables identify rows by (key, SOURCE column(s)):
   // the landing re-derives the partition from the source values (so an
   // UPDATE can never desync value and partition), and the derived
   // columns themselves stay nullable for the NULL-means-derive INSERT
   // form, which Spark's non-null row-id resolution would reject
   private val idCols: Seq[String] =
-    PartitionedTable.generatedLevelsOf(SparkSession.active, spec.dir) match {
-      case Some(levels) => levels.map(_.srcCol).distinct
-      case None =>
-        Seq(PartitionedTable.generatedBy(SparkSession.active, spec.dir)
-          .map(_._1).orElse(spec.partCol).getOrElse(
-            throw new IllegalArgumentException(
-              "graft catalog: SQL MERGE/UPDATE/DELETE need the table " +
-                "registered with its partition column")))
-    }
+    PartitionedTable.generatedLevelsOf(SparkSession.active, spec.dir)
+      .map(_.map(_.srcCol).distinct).getOrElse(Seq(spec.partCol.getOrElse(
+        throw new IllegalArgumentException(
+          "graft catalog: SQL MERGE/UPDATE/DELETE need the table " +
+            "registered with its partition column"))))
   override def command(): RowLevelOperation.Command = cmd
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(spec, version, full)
@@ -608,7 +586,7 @@ class GraftDeltaBatchWrite(
       }
       if (paths.isEmpty) return // all-no-op statement: no forged version
       val staged = GraftWrites.readStaged(spark, paths, outSchema)
-      // generated/level tables land through the GUARDED merges: the
+      // generated tables land through the GUARDED merge: the
       // partition re-derives from the staged SOURCE value(s) (deletes
       // ship only (key, sources)), and the spec-evolution clash guard
       // refuses a keyed change that would shadow a pre-evolution
@@ -617,9 +595,6 @@ class GraftDeltaBatchWrite(
       // partition since the statement's scan fails the statement loud.
       if (PartitionedTable.generatedLevelsOf(spark, dir).isDefined)
         PartitionedTable.mergeLevels(spark, dir, staged, key,
-          at = s"sql_$tag", sinceVersion = Some(snapshot)): Unit
-      else if (PartitionedTable.generatedBy(spark, dir).isDefined)
-        PartitionedTable.mergeGenerated(spark, dir, staged, key,
           at = s"sql_$tag", sinceVersion = Some(snapshot)): Unit
       else
         PartitionedTable.merge(spark, dir, staged, key, idCols.head,

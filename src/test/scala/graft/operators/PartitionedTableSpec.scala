@@ -1585,83 +1585,28 @@ class PartitionedTableSpec extends SparkSpec {
     PartitionedTable.cloneTable(spark, src, dst0, asOf = Some(0L))
     assert(PartitionedTable.read(spark, dst0).count() === 100)
 
-    // generation rule carries over: derived merges + source-range reads
+    // generation rule (a one-level spec) carries over: derived merges
+    // + source-range reads
     val gsrc = freshStore()
     val gdst = freshStore()
     val days = spark.range(60).select(
       col("id").as("k"),
       date_add(to_date(lit("1996-01-01")), (col("id") * 3).cast("int")).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, gsrc, days, "d",
-      PartitionedTable.PartGen.Month)
+    val month = PartitionedTable.GenLevel("d",
+      PartitionedTable.PartGen.Month, "part_month")
+    PartitionedTable.commitLevels(spark, gsrc, days, Seq(month))
     PartitionedTable.cloneTable(spark, gsrc, gdst)
-    assert(PartitionedTable.generatedBy(spark, gdst) ===
-      Some(("d", PartitionedTable.PartGen.Month, "part_month")))
-    PartitionedTable.mergeGenerated(spark, gdst,
+    assert(PartitionedTable.generatedLevelsOf(spark, gdst) === Some(Seq(month)))
+    PartitionedTable.mergeLevels(spark, gdst,
       Seq((7L, java.sql.Date.valueOf("1996-02-10"), 777L, "upsert"))
         .toDF("k", "d", "v", "op"), "k")
-    assert(PartitionedTable.readWhereSrc(spark, gdst, "1996-02-01", "1996-02-28")
+    assert(PartitionedTable.readWhereSrcLevels(spark, gdst,
+      Seq(("d", "1996-02-01", "1996-02-28")))
       .filter(col("k") === 7).head.getAs[Long]("v") === 777L)
     // the generated source is untouched by the clone's merge
     assert(PartitionedTable.read(spark, gsrc)
       .filter(col("k") === 7).head.getAs[Long]("v") === 70L)
-  }
-
-  test("generated partition columns: source-range probes prune partitions, merges derive routing, rules are write-once") {
-    import spark.implicits._
-    val dir = freshStore()
-    val days = spark.range(120).select(
-      col("id").as("k"),
-      date_add(to_date(lit("1996-01-01")), (col("id") * 3).cast("int"))
-        .as("d"),
-      (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir, days, "d",
-      PartitionedTable.PartGen.Month)
-    assert(PartitionedTable.generatedBy(spark, dir) ===
-      Some(("d", PartitionedTable.PartGen.Month, "part_month")))
-
-    // exact result + partition pruning: a 2-month probe reads only the
-    // 2-3 in-range partition dirs, never the table's full year
-    val probe = PartitionedTable.readWhereSrc(
-      spark, dir, "1996-03-05", "1996-04-20")
-    val expect = days.filter(
-      col("d").between(lit("1996-03-05"), lit("1996-04-20")))
-    assert(probe.select("k").collect().map(_.getLong(0)).sorted
-      .sameElements(expect.select("k").collect().map(_.getLong(0)).sorted))
-    val readParts = probe.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__part="))).distinct
-    assert(readParts.length <= 3 && readParts.nonEmpty,
-      s"2-month probe must read <= 3 month partitions, read: ${readParts.toSeq}")
-
-    // merge without a partition column: routing derived from the rule
-    val change = Seq((5L, java.sql.Date.valueOf("1996-09-15"), 999L, "upsert"))
-      .toDF("k", "d", "v", "op")
-    PartitionedTable.mergeGenerated(spark, dir, change, "k")
-    val moved = PartitionedTable.readWhereSrc(
-      spark, dir, "1996-09-01", "1996-09-30").filter(col("k") === 5)
-    assert(moved.count() === 1 && moved.head.getAs[Long]("v") === 999L)
-
-    // out-of-range probe folds to an empty (zero-partition) scan
-    assert(PartitionedTable.readWhereSrc(
-      spark, dir, "2005-01-01", "2005-12-31").count() === 0)
-
-    // a conflicting re-declaration fails loud
-    intercept[IllegalArgumentException](
-      PartitionedTable.commitGenerated(spark, dir, days, "d",
-        PartitionedTable.PartGen.Year))
-
-    // prefix rule on a string source prunes the same way
-    val dir2 = freshStore()
-    val docs = spark.range(80).select(
-      col("id").as("k"),
-      concat(lit("src"), (col("id") % 8).cast("string"),
-        lit("/item"), col("id").cast("string")).as("uri"))
-    PartitionedTable.commitGenerated(spark, dir2, docs, "uri",
-      PartitionedTable.PartGen.Prefix(4))
-    val one = PartitionedTable.readWhereSrc(spark, dir2, "src3", "src3~")
-    assert(one.count() === 10)
-    assert(one.inputFiles.flatMap(_.split("/").find(_.startsWith("__part=")))
-      .distinct.length === 1, "prefix probe must read exactly one partition")
   }
 
   test("expirePartitions: metadata-only drop below the cutoff, boundary partition kept, time travel + vacuum contracts hold") {
@@ -1671,8 +1616,8 @@ class PartitionedTableSpec extends SparkSpec {
       col("id").as("k"),
       date_add(to_date(lit("1996-01-01")), (col("id") * 3).cast("int")).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir, days, "d",
-      PartitionedTable.PartGen.Month)
+    PartitionedTable.commitLevels(spark, dir, days, Seq(
+      PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "part_month")))
     val filesBefore = files(dir, "__part=1996-06")
 
     // cutoff mid-June: months Jan-May drop, June (the boundary) is KEPT
@@ -1706,6 +1651,14 @@ class PartitionedTableSpec extends SparkSpec {
     PartitionedTable.commit(spark, plain, table(20), "part")
     intercept[IllegalArgumentException](
       PartitionedTable.expirePartitions(spark, plain, "p1"))
+    // neither do composite values of a two-level spec
+    val two = freshStore()
+    PartitionedTable.commitLevels(spark, two,
+      days.withColumn("s", lit("a")), Seq(
+        PartitionedTable.GenLevel("s", PartitionedTable.PartGen.Prefix(1), "ps"),
+        PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "pm")))
+    intercept[IllegalArgumentException](
+      PartitionedTable.expirePartitions(spark, two, "1996-06-15"))
   }
 
   test("describeDetail: per-partition metadata matches content, DV rows subtract tombstones, clones label resolution") {
@@ -1972,6 +1925,95 @@ class PartitionedTableSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
     assert(messages(ex2).exists(m => m != null && m.contains("must not")))
+
+    // ONE level is the same spec (N = 1): source-range probes prune
+    // partitions, merges derive routing, the spec is write-once
+    val dir3 = freshStore()
+    val days = spark.range(120).select(
+      col("id").as("k"),
+      date_add(to_date(lit("1996-01-01")), (col("id") * 3).cast("int"))
+        .as("d"),
+      (col("id") * 10).as("v"))
+    val month = PartitionedTable.GenLevel("d",
+      PartitionedTable.PartGen.Month, "part_month")
+    PartitionedTable.commitLevels(spark, dir3, days, Seq(month))
+    assert(PartitionedTable.generatedLevelsOf(spark, dir3) === Some(Seq(month)))
+
+    // exact result + partition pruning: a 2-month probe reads only the
+    // 2-3 in-range partition dirs, never the table's full year
+    val probe = PartitionedTable.readWhereSrcLevels(
+      spark, dir3, Seq(("d", "1996-03-05", "1996-04-20")))
+    val expect3 = days.filter(
+      col("d").between(lit("1996-03-05"), lit("1996-04-20")))
+    assert(probe.select("k").collect().map(_.getLong(0)).sorted
+      .sameElements(expect3.select("k").collect().map(_.getLong(0)).sorted))
+    val readParts = probe.inputFiles
+      .flatMap(_.split("/").find(_.startsWith("__part="))).distinct
+    assert(readParts.length <= 3 && readParts.nonEmpty,
+      s"2-month probe must read <= 3 month partitions, read: ${readParts.toSeq}")
+
+    // merge without a partition column: routing derived from the rule
+    val change = Seq((5L, java.sql.Date.valueOf("1996-09-15"), 999L, "upsert"))
+      .toDF("k", "d", "v", "op")
+    PartitionedTable.mergeLevels(spark, dir3, change, "k")
+    val moved = PartitionedTable.readWhereSrcLevels(
+      spark, dir3, Seq(("d", "1996-09-01", "1996-09-30"))).filter(col("k") === 5)
+    assert(moved.count() === 1 && moved.head.getAs[Long]("v") === 999L)
+
+    // out-of-range probe folds to an empty (zero-partition) scan
+    assert(PartitionedTable.readWhereSrcLevels(
+      spark, dir3, Seq(("d", "2005-01-01", "2005-12-31"))).count() === 0)
+
+    // a conflicting re-declaration fails loud
+    intercept[IllegalArgumentException](
+      PartitionedTable.commitLevels(spark, dir3, days, Seq(
+        PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Year, "part_month"))))
+
+    // prefix rule on a string source prunes the same way
+    val dir4 = freshStore()
+    val docs = spark.range(80).select(
+      col("id").as("k"),
+      concat(lit("src"), (col("id") % 8).cast("string"),
+        lit("/item"), col("id").cast("string")).as("uri"))
+    PartitionedTable.commitLevels(spark, dir4, docs, Seq(
+      PartitionedTable.GenLevel("uri", PartitionedTable.PartGen.Prefix(4), "part_prefix4")))
+    val one = PartitionedTable.readWhereSrcLevels(spark, dir4,
+      Seq(("uri", "src3", "src3~")))
+    assert(one.count() === 10)
+    assert(one.inputFiles.flatMap(_.split("/").find(_.startsWith("__part=")))
+      .distinct.length === 1, "prefix probe must read exactly one partition")
+  }
+
+  test("a one-level spec partitions by its level column: no part_levels composite, manifest keys are the level values, a '/' in a prefix value still prunes") {
+    val dir = freshStore()
+    val docs = spark.range(80).select(
+      col("id").as("k"),
+      concat(lit("src"), (col("id") % 8).cast("string"),
+        lit("/item"), col("id").cast("string")).as("uri"))
+    // Prefix(6) renders 'srcN/i': a '/' inside the one level's value
+    PartitionedTable.commitLevels(spark, dir, docs, Seq(
+      PartitionedTable.GenLevel("uri", PartitionedTable.PartGen.Prefix(6), "pu")))
+    val read = PartitionedTable.read(spark, dir)
+    assert(!read.columns.contains(PartitionedTable.LevelsPartName),
+      s"one level writes no composite column: ${read.columns.toSeq}")
+    assert(read.columns.toSet === Set("k", "uri", "pu"))
+    val keys = PartitionedTable.manifest(spark, dir,
+      PartitionedTable.latest(spark, dir).get).keySet
+    assert(keys === (0 until 8).map(i =>
+      "__part=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .escapePathName(s"src$i/i")).toSet,
+      s"manifest keys must be the level values verbatim: $keys")
+    assert(PartitionedTable.partitionValues(spark, dir).toSet ===
+      (0 until 8).map(i => s"src$i/i").toSet)
+    // the whole value is the one segment: a range probe prunes to the
+    // one matching partition and stays exact
+    val one = PartitionedTable.readWhereSrcLevels(spark, dir,
+      Seq(("uri", "src3/item", "src3/item~")))
+    assert(one.count() === 10)
+    assert(one.inputFiles.flatMap(_.split("/").find(_.startsWith("__part=")))
+      .distinct.length === 1, "prefix probe must read exactly one partition")
+    assert(PartitionedTable.partitionsForSourceValuesLevels(spark, dir, "uri",
+      Seq("src5/item45")) === Seq("src5/i"))
   }
 
   test("spec evolution: old partitions keep their rule, pruning/retention attribute per epoch, clashing merges refuse") {
@@ -1981,16 +2023,17 @@ class PartitionedTableSpec extends SparkSpec {
       col("id").as("k"),
       date_add(to_date(lit("1995-01-01")), col("id").cast("int")).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir,
-      df.filter(col("d") < lit("1996-01-01")), "d",
-      PartitionedTable.PartGen.Year, "pd")
+    val year = Seq(PartitionedTable.GenLevel("d",
+      PartitionedTable.PartGen.Year, "pd"))
+    PartitionedTable.commitLevels(spark, dir,
+      df.filter(col("d") < lit("1996-01-01")), year)
     assert(PartitionedTable.partitionValues(spark, dir) === Seq("1995"))
 
-    PartitionedTable.evolveGenRule(spark, dir, PartitionedTable.PartGen.Month)
-    assert(PartitionedTable.genEpochsOf(spark, dir) ===
-      Seq(PartitionedTable.PartGen.Year, PartitionedTable.PartGen.Month))
+    PartitionedTable.evolveGenLevel(spark, dir, "pd", PartitionedTable.PartGen.Month)
+    assert(PartitionedTable.levelEpochsOf(spark, dir) ===
+      Some(Seq(Seq(PartitionedTable.PartGen.Year, PartitionedTable.PartGen.Month))))
     // new writes derive MONTH partitions; 1995 stays a single year dir
-    PartitionedTable.mergeGenerated(spark, dir,
+    PartitionedTable.mergeLevels(spark, dir,
       df.filter(col("d") >= lit("1996-01-01")).withColumn("op", lit("upsert")),
       "k")
     val parts = PartitionedTable.partitionValues(spark, dir)
@@ -1998,7 +2041,8 @@ class PartitionedTableSpec extends SparkSpec {
       parts.count(_.length == 7) === 12 && parts.count(_.length == 4) === 1)
 
     // a boundary-spanning probe opens the old-rule year + in-range months
-    val q = PartitionedTable.readWhereSrc(spark, dir, "1995-11-15", "1996-02-10")
+    val q = PartitionedTable.readWhereSrcLevels(spark, dir,
+      Seq(("d", "1995-11-15", "1996-02-10")))
     val dirsRead = q.inputFiles.map(_.split("/").find(_.startsWith("__part="))
       .getOrElse("?")).toSet
     assert(dirsRead === Set("__part=1995", "__part=1996-01", "__part=1996-02"),
@@ -2020,12 +2064,11 @@ class PartitionedTableSpec extends SparkSpec {
     // a keyed merge that would shadow a live pre-evolution partition
     // refuses loud (fresh table: year 1995 still live after evolving)
     val dir2 = freshStore()
-    PartitionedTable.commitGenerated(spark, dir2,
-      df.filter(col("d") < lit("1996-01-01")), "d",
-      PartitionedTable.PartGen.Year, "pd")
-    PartitionedTable.evolveGenRule(spark, dir2, PartitionedTable.PartGen.Month)
+    PartitionedTable.commitLevels(spark, dir2,
+      df.filter(col("d") < lit("1996-01-01")), year)
+    PartitionedTable.evolveGenLevel(spark, dir2, "pd", PartitionedTable.PartGen.Month)
     val ex = intercept[IllegalArgumentException] {
-      PartitionedTable.mergeGenerated(spark, dir2,
+      PartitionedTable.mergeLevels(spark, dir2,
         Seq((3L, java.sql.Date.valueOf("1995-06-15"), 999L, "upsert"))
           .toDF("k", "d", "v", "op"), "k")
     }
@@ -2033,21 +2076,23 @@ class PartitionedTableSpec extends SparkSpec {
 
     // evolution refuses ambiguous-width chains and non-generated tables
     intercept[IllegalArgumentException](
-      PartitionedTable.evolveGenRule(spark, dir2,
+      PartitionedTable.evolveGenLevel(spark, dir2, "pd",
         PartitionedTable.PartGen.Prefix(3)))
     val plain = freshStore()
     PartitionedTable.commit(spark, plain,
       Seq((1L, "p1", 1L)).toDF("k", "part", "v"), "part")
     intercept[IllegalArgumentException](
-      PartitionedTable.evolveGenRule(spark, plain, PartitionedTable.PartGen.Day))
+      PartitionedTable.evolveGenLevel(spark, plain, "pd",
+        PartitionedTable.PartGen.Day))
 
     // a clone of an evolved table attributes inherited partitions
     // identically (the epoch chain carries over)
     val cl = freshStore()
     PartitionedTable.cloneTable(spark, dir2, cl)
-    assert(PartitionedTable.genEpochsOf(spark, cl) ===
-      Seq(PartitionedTable.PartGen.Year, PartitionedTable.PartGen.Month))
-    assert(PartitionedTable.readWhereSrc(spark, cl, "1995-11-15", "1995-12-31")
+    assert(PartitionedTable.levelEpochsOf(spark, cl) ===
+      Some(Seq(Seq(PartitionedTable.PartGen.Year, PartitionedTable.PartGen.Month))))
+    assert(PartitionedTable.readWhereSrcLevels(spark, cl,
+      Seq(("d", "1995-11-15", "1995-12-31")))
       .count() === df.filter(col("d") >= lit("1995-11-15") &&
         col("d") < lit("1996-01-01")).count())
   }
@@ -2206,6 +2251,33 @@ class PartitionedTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       PartitionedTable.evolveGenLevel(spark, dir, "catp",
         PartitionedTable.PartGen.Prefix(2)))
+  }
+
+  test("level specs refuse DROP/RENAME of any level's source or derived column; the table stays writable") {
+    import PartitionedTable.{GenLevel, PartGen}
+    val df = spark.range(60).select(
+      col("id").as("k"),
+      date_add(to_date(lit("1996-01-01")), (col("id") * 3).cast("int")).as("d"),
+      concat(lit("s"), (col("id") % 2).cast("string")).as("s"),
+      (col("id") * 10).as("v"))
+    val two = Seq(GenLevel("d", PartGen.Month, "pm"), GenLevel("s", PartGen.Prefix(1), "ps"))
+    Seq(two, two.take(1)).foreach { levels =>
+      val dir = freshStore()
+      PartitionedTable.commitLevels(spark, dir, df, levels)
+      levels.flatMap(l => Seq(l.srcCol, l.name)).foreach { c =>
+        val ex = intercept[IllegalArgumentException](
+          PartitionedTable.dropColumn(spark, dir, c))
+        assert(ex.getMessage.contains("generation rule"), ex.getMessage)
+        intercept[IllegalArgumentException](
+          PartitionedTable.renameColumn(spark, dir, c, s"${c}_renamed"))
+      }
+      // the spec still derives every write, and unreferenced columns
+      // still drop
+      PartitionedTable.commitLevels(spark, dir, df.filter(col("k") < 10), levels)
+      assert(PartitionedTable.read(spark, dir).count() === 10)
+      PartitionedTable.dropColumn(spark, dir, "v")
+      assert(!PartitionedTable.read(spark, dir).columns.contains("v"))
+    }
   }
 
   test("wall-clock vacuum keeps exactly the stamped-window versions; reads and feeds below the horizon fail loud") {

@@ -164,8 +164,8 @@ class GraftRuntimePruneSpec extends SparkSpec {
       to_date(concat(lit("1996-0"), ((col("id") % 6) + 1).cast("string"),
         lit("-15"))).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir, rows, "d",
-      PartitionedTable.PartGen.Month, "pm")
+    PartitionedTable.commitLevels(spark, dir, rows, Seq(
+      PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "pm")))
     GraftCatalog.register(spark, "rtp", "cal", dir, partCol = Some("pm"))
     // calendar dim keyed by DATE with a selective flag
     Seq((java.sql.Date.valueOf("1996-02-15"), "holiday"),
@@ -201,8 +201,8 @@ class GraftRuntimePruneSpec extends SparkSpec {
 
     // evolution: new rows land under a DAY rule; the same join still
     // prunes correctly across BOTH epochs (per-partition attribution)
-    PartitionedTable.evolveGenRule(spark, dir, PartitionedTable.PartGen.Day)
-    PartitionedTable.mergeGenerated(spark, dir,
+    PartitionedTable.evolveGenLevel(spark, dir, "pm", PartitionedTable.PartGen.Day)
+    PartitionedTable.mergeLevels(spark, dir,
       Seq((9001L, java.sql.Date.valueOf("1996-08-02"), 1L, "upsert"),
         (9002L, java.sql.Date.valueOf("1996-08-03"), 2L, "upsert"))
         .toDF("k", "d", "v", "op"), "k")
@@ -535,8 +535,8 @@ class GraftRuntimePruneSpec extends SparkSpec {
       to_date(concat(lit("1996-0"), ((col("id") % 6) + 1).cast("string"),
         lit("-15"))).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir, rows, "d",
-      PartitionedTable.PartGen.Month, "pm")
+    PartitionedTable.commitLevels(spark, dir, rows, Seq(
+      PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "pm")))
     GraftCatalog.register(spark, "rtp", "casted", dir, partCol = Some("pm"))
     Seq((java.sql.Timestamp.valueOf("1996-02-15 00:00:00"), "keep"),
       (java.sql.Timestamp.valueOf("1996-03-15 12:30:00"), "keep"),
@@ -581,11 +581,12 @@ class GraftRuntimePruneSpec extends SparkSpec {
     // NTZ↔LTZ is only injective under a FIXED-OFFSET zone: under a DST
     // zone the same q121-shaped join must stay unpruned (and exact)
     val ntzDir = freshStore("graftrtpdst")
-    PartitionedTable.commitGenerated(spark, ntzDir, spark.range(100).select(
+    PartitionedTable.commitLevels(spark, ntzDir, spark.range(100).select(
       col("id").as("k"),
       to_timestamp_ntz(concat(lit("1996-0"), ((col("id") % 4) + 1)
         .cast("string"), lit("-15 00:00:00"))).as("ts"),
-      col("id").as("v")), "ts", PartitionedTable.PartGen.Month, "pm")
+      col("id").as("v")), Seq(
+        PartitionedTable.GenLevel("ts", PartitionedTable.PartGen.Month, "pm")))
     GraftCatalog.register(spark, "rtp", "dst", ntzDir, partCol = Some("pm"))
     Seq((java.sql.Timestamp.valueOf("1996-02-15 00:00:00"), "keep"))
       .toDF("dt", "grp").createOrReplaceTempView("rtpdst_dim")

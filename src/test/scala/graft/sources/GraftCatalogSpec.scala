@@ -171,11 +171,12 @@ class GraftCatalogSpec extends SparkSpec {
       date_add(to_date(lit("1995-01-01")), col("id").cast("int")).as("d"),
       (col("id") * 10).as("v"))
     // year-partitioned 1995, evolved to month for 1996
-    PartitionedTable.commitGenerated(spark, dir,
-      df.filter(col("d") < lit("1996-01-01")), "d",
-      PartitionedTable.PartGen.Year, "pd")
-    PartitionedTable.evolveGenRule(spark, dir, PartitionedTable.PartGen.Month)
-    PartitionedTable.mergeGenerated(spark, dir,
+    PartitionedTable.commitLevels(spark, dir,
+      df.filter(col("d") < lit("1996-01-01")), Seq(
+        PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Year, "pd")))
+    PartitionedTable.evolveGenLevel(spark, dir, "pd",
+      PartitionedTable.PartGen.Month)
+    PartitionedTable.mergeLevels(spark, dir,
       df.filter(col("d") >= lit("1996-01-01")).withColumn("op", lit("upsert")),
       "k")
     GraftCatalog.register(spark, "t", "gen", dir, partCol = Some("pd"))
@@ -193,6 +194,50 @@ class GraftCatalogSpec extends SparkSpec {
       "mid-period bounds stay exact via the residual")
     // a predicate on a NON-rule column falls through, still exact
     assert(spark.sql("SELECT k FROM graft.t.gen WHERE v = 500").count() === 1)
+  }
+
+  test("source-range SQL reads keep rows whose probed column reads an ADD COLUMN DEFAULT, sits behind a rename or is binary, on one- and two-level specs") {
+    val df = spark.range(90).select(
+      col("id").as("k"),
+      date_add(to_date(lit("2020-02-01")), col("id").cast("int")).as("d"),
+      concat(lit("s"), (col("id") % 2).cast("string")).as("s"),
+      (col("id") * 10).as("v"),
+      col("id").cast("string").cast("binary").as("b"))
+    val month = PartitionedTable.GenLevel("d",
+      PartitionedTable.PartGen.Month, "pm")
+    val status = PartitionedTable.GenLevel("s",
+      PartitionedTable.PartGen.Prefix(2), "ps")
+    Seq(Seq(month), Seq(status, month)).zipWithIndex.foreach {
+      case (levels, i) =>
+        val dir = freshStore()
+        PartitionedTable.commitLevels(spark, dir, df, levels)
+        // no footer carries badge yet: every row reads the DEFAULT
+        PartitionedTable.addColumn(spark, dir, "badge",
+          org.apache.spark.sql.types.StringType, Some("'legacy'"))
+        PartitionedTable.renameColumn(spark, dir, "v", "amount")
+        GraftCatalog.register(spark, "t", s"dflt$i", dir,
+          partCol = Some(PartitionedTable.partColOf(levels)))
+        val t = s"graft.t.dflt$i"
+        val range = "d BETWEEN DATE '2020-02-01' AND DATE '2020-04-30'"
+        assert(PartitionedTable.readWhereSrcLevels(spark, dir, Seq(
+          ("d", "2020-02-01", "2020-04-30"), ("badge", "legacy", "legacy")))
+          .count() === 90, s"library probe, ${levels.size} level(s)")
+        assert(spark.sql(s"SELECT count(*) FROM $t WHERE $range " +
+          "AND badge = 'legacy'").head.getLong(0) === 90,
+          s"SQL probe, ${levels.size} level(s)")
+        assert(spark.sql(s"SELECT count(*) FROM $t WHERE $range " +
+          "AND badge = 'other'").head.getLong(0) === 0)
+        // a renamed column resolves its type from at-write footers
+        assert(spark.sql(s"SELECT k FROM $t WHERE d BETWEEN DATE " +
+          "'2020-03-01' AND DATE '2020-03-31' AND amount = 500")
+          .collect().map(_.getLong(0)).toSeq === Seq(50L),
+          s"renamed column, ${levels.size} level(s)")
+        // a binary literal has no string rendering to route through
+        assert(spark.sql(s"SELECT k FROM $t WHERE $range AND b = X'3530'")
+          .collect().map(_.getLong(0)).toSeq === Seq(50L),
+          s"binary column, ${levels.size} level(s)")
+        GraftCatalog.unregister("t", s"dflt$i")
+    }
   }
 
   test("metadata tables: t$history and t$detail read the ops surfaces through plain SQL") {

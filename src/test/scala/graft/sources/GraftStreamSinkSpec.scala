@@ -181,62 +181,70 @@ class GraftStreamSinkSpec extends SparkSpec {
   }
 
   test("streaming upsert into a LEVEL table derives the composite per batch; a mid-stream spec evolution's shadow risk fails the epoch loud") {
-    val dir = s"${fresh()}/t"; val ckpt = s"${fresh()}/ckpt"
-    PartitionedTable.commitLevels(spark, dir,
-      Seq((1L, "S0", java.sql.Date.valueOf("1996-01-15"), 10L),
-        (2L, "S1", java.sql.Date.valueOf("1996-02-15"), 20L))
-        .toDF("k", "st", "d", "v"),
-      Seq(
-        PartitionedTable.GenLevel("st",
-          PartitionedTable.PartGen.Prefix(2), "ps"),
-        PartitionedTable.GenLevel("d",
-          PartitionedTable.PartGen.Month, "pm")))
-    seq += 1
-    val name = s"lv$seq"
-    GraftCatalog.register(spark, "sink", name, dir,
-      partCol = Some(PartitionedTable.LevelsPartName), keyCol = Some("k"))
-    val t = s"graft.sink.$name"
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String, Int, Long)]
-    def start() = in.toDF().toDF("k", "st", "off", "v")
-      .select(col("k"), col("st"),
-        date_add(lit("1996-01-01").cast("date"), col("off")).as("d"),
-        col("v"))
-      .writeStream.option("checkpointLocation", ckpt)
-      .option("upsert", "true").outputMode("update")
-      .trigger(Trigger.AvailableNow()).toTable(t)
+    val twoLevels = Seq(
+      PartitionedTable.GenLevel("st",
+        PartitionedTable.PartGen.Prefix(2), "ps"),
+      PartitionedTable.GenLevel("d",
+        PartitionedTable.PartGen.Month, "pm"))
+    // one more input: a one-level spec (no composite — the partition
+    // is the month itself) takes the same guarded upsert leg
+    Seq((twoLevels, (st: String, p: String) => s"$st/$p"),
+        (twoLevels.drop(1), (_: String, p: String) => p)).foreach {
+      case (levels, partOf) =>
+        val dir = s"${fresh()}/t"; val ckpt = s"${fresh()}/ckpt"
+        PartitionedTable.commitLevels(spark, dir,
+          Seq((1L, "S0", java.sql.Date.valueOf("1996-01-15"), 10L),
+            (2L, "S1", java.sql.Date.valueOf("1996-02-15"), 20L))
+            .toDF("k", "st", "d", "v"),
+          levels)
+        seq += 1
+        val name = s"lv$seq"
+        GraftCatalog.register(spark, "sink", name, dir,
+          partCol = Some(PartitionedTable.partColOf(levels)), keyCol = Some("k"))
+        val t = s"graft.sink.$name"
+        implicit val sqlCtx = spark.sqlContext
+        val in = MemoryStream[(Long, String, Int, Long)]
+        def start() = in.toDF().toDF("k", "st", "off", "v")
+          .select(col("k"), col("st"),
+            date_add(lit("1996-01-01").cast("date"), col("off")).as("d"),
+            col("v"))
+          .writeStream.option("checkpointLocation", ckpt)
+          .option("upsert", "true").outputMode("update")
+          .trigger(Trigger.AvailableNow()).toTable(t)
 
-    // batch 1 ships ONLY source columns: k=1 updates in place
-    // (S0/1996-01), k=3 inserts a new combination (S1/1996-03)
-    in.addData((1L, "S0", 14, 100L), (3L, "S1", 63, 30L))
-    val q1 = start(); q1.awaitTermination()
-    assert(PartitionedTable.partitionValues(spark, dir).sorted ===
-      Seq("S0/1996-01", "S1/1996-02", "S1/1996-03"),
-      "the sink must derive BOTH levels and the composite per batch")
-    val got = PartitionedTable.read(spark, dir).select("k", "v").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(got === Seq((1L, 100L), (2L, 20L), (3L, 30L)),
-      "keyed upsert must overwrite, not duplicate")
+        // batch 1 ships ONLY source columns: k=1 updates in place
+        // (S0/1996-01), k=3 inserts a new combination (S1/1996-03)
+        in.addData((1L, "S0", 14, 100L), (3L, "S1", 63, 30L))
+        val q1 = start(); q1.awaitTermination()
+        assert(PartitionedTable.partitionValues(spark, dir).sorted ===
+          Seq(partOf("S0", "1996-01"), partOf("S1", "1996-02"),
+            partOf("S1", "1996-03")),
+          "the sink must derive every level and the partition per batch")
+        val got = PartitionedTable.read(spark, dir).select("k", "v").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+        assert(got === Seq((1L, 100L), (2L, 20L), (3L, 30L)),
+          "keyed upsert must overwrite, not duplicate")
 
-    // mid-stream SPEC EVOLUTION (month → day on the date level): a
-    // later batch whose row renders, under the pre-evolution epoch
-    // mix, onto a LIVE combination would land a duplicate next to the
-    // stale row — the epoch must fail loud (the batch mergeLevels
-    // guard, inherited by the sink) and nothing may land
-    PartitionedTable.evolveGenLevel(spark, dir, "pm",
-      PartitionedTable.PartGen.Day)
-    in.addData((1L, "S0", 19, 999L)) // S0/1996-01-20 vs live S0/1996-01
-    val vBefore = PartitionedTable.latest(spark, dir).get
-    val q2 = start()
-    val e = intercept[Exception](q2.awaitTermination())
-    def msgs(x: Throwable): Seq[String] =
-      Option(x).toSeq.flatMap(y => Option(y.getMessage).toSeq ++ msgs(y.getCause))
-    assert(msgs(e).exists(_.contains("shadow pre-evolution")),
-      msgs(e).mkString(" | "))
-    assert(PartitionedTable.latest(spark, dir).get === vBefore,
-      "a refused epoch must not mint a version")
-    assert(PartitionedTable.read(spark, dir).filter(col("k") === 1)
-      .select("v").head.getLong(0) === 100L)
+        // mid-stream SPEC EVOLUTION (month → day on the date level): a
+        // later batch whose row renders, under the pre-evolution epoch
+        // mix, onto a LIVE partition would land a duplicate next to the
+        // stale row — the epoch must fail loud (the batch mergeLevels
+        // guard, inherited by the sink) and nothing may land
+        PartitionedTable.evolveGenLevel(spark, dir, "pm",
+          PartitionedTable.PartGen.Day)
+        in.addData((1L, "S0", 19, 999L)) // 1996-01-20 vs live S0/1996-01
+        val vBefore = PartitionedTable.latest(spark, dir).get
+        val q2 = start()
+        val e = intercept[Exception](q2.awaitTermination())
+        def msgs(x: Throwable): Seq[String] =
+          Option(x).toSeq.flatMap(y => Option(y.getMessage).toSeq ++ msgs(y.getCause))
+        assert(msgs(e).exists(_.contains("shadow pre-evolution")),
+          msgs(e).mkString(" | "))
+        assert(PartitionedTable.latest(spark, dir).get === vBefore,
+          "a refused epoch must not mint a version")
+        assert(PartitionedTable.read(spark, dir).filter(col("k") === 1)
+          .select("v").head.getLong(0) === 100L)
+    }
   }
 
   test("cdf source → sink loop: a second table replicates the first through two streaming queries") {

@@ -217,15 +217,16 @@ class GraftWritesSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) AS n FROM $t WHERE k % 4 = 1")
       .head().getLong(0) === 0)
 
-    // evolved single-rule table: a keyed SQL change that would shadow a
-    // pre-evolution partition is refused (the mergeGenerated guard)
+    // evolved one-level table: a keyed SQL change that would shadow a
+    // pre-evolution partition is refused (the mergeLevels guard)
     val gdir = freshStore()
     val gen = spark.range(20).select(col("id").as("k"),
       to_date(concat(lit("1995-0"), (col("id") % 5 + 1).cast("string"),
         lit("-10"))).as("d"), (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, gdir, gen, "d",
-      PartitionedTable.PartGen.Year, "pd")
-    PartitionedTable.evolveGenRule(spark, gdir, PartitionedTable.PartGen.Month)
+    PartitionedTable.commitLevels(spark, gdir, gen, Seq(
+      PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Year, "pd")))
+    PartitionedTable.evolveGenLevel(spark, gdir, "pd",
+      PartitionedTable.PartGen.Month)
     seq += 1
     GraftCatalog.register(spark, "w", s"ev$seq", gdir,
       partCol = Some("pd"), keyCol = Some("k"))
@@ -497,13 +498,14 @@ class GraftWritesSpec extends SparkSpec {
       to_date(concat(lit("1996-0"), ((col("id") % 3) + 1).cast("string"),
         lit("-15"))).as("d"),
       (col("id") * 10).as("v"))
-    PartitionedTable.commitGenerated(spark, dir, df, "d",
-      PartitionedTable.PartGen.Month, "pm")
+    PartitionedTable.commitLevels(spark, dir, df, Seq(
+      PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "pm")))
     GraftCatalog.register(spark, "w", "gen", dir, partCol = Some("pm"))
     // a consistent row lands in its derived partition
     spark.sql("INSERT INTO graft.w.gen VALUES " +
       "(1000, DATE '1996-02-20', 7, '1996-02')")
-    assert(PartitionedTable.readWhereSrc(spark, dir, "1996-02-20", "1996-02-20")
+    assert(PartitionedTable.readWhereSrcLevels(spark, dir,
+      Seq(("d", "1996-02-20", "1996-02-20")))
       .filter(col("k") === 1000L).count() === 1)
     // a lying derived value is refused inside the landing job
     val ex = intercept[Exception](spark.sql(
