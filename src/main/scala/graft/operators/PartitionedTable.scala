@@ -273,7 +273,9 @@ object PartitionedTable {
     * Resolution is #versions tiny driver-side header reads (the
     * [[versionAt]] cost), never a data scan; None = no retained commit
     * carries the tag. Tags are free-form minus quotes/control chars
-    * (the [[metaLine]] contract), so the header match is exact. */
+    * (the [[metaLine]] contract), so the header match is exact. Also
+    * the replay probe of the streaming tag protocol ([[mergeStream]]):
+    * a `stream=<id>;batch=<n>` tag is unique, so newest = only. */
   def versionByTag(spark: SparkSession, dir: String, tag: String): Option[Long] = {
     require(tag.nonEmpty, "versionByTag: empty tag")
     val needle = s""""at":"$tag""""
@@ -1432,8 +1434,8 @@ object PartitionedTable {
   }
 
   /** Exactly-once MERGE for streaming folds (manifest version = batch
-    * id, the [[graft.streaming.MergeStreams]] contract ported to the
-    * partition-scoped table): a retried batch merges against the
+    * id) — the landing surface of every [[graft.streaming.MergeStreams]]
+    * micro-batch: a retried batch merges against the
     * newest manifest OLDER than its id and no-ops if its own manifest
     * already landed — so a redelivered changelog batch can never
     * double-apply, and a crash before the manifest rename leaves only
@@ -1496,24 +1498,12 @@ object PartitionedTable {
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomBits: Long = DefaultBloomBits): Long = {
-    require(streamId.nonEmpty && !streamId.exists(c =>
-      c == '"' || c == '\\' || c < ' '),
-      s"mergeStream: bad stream id '$streamId'")
+    validStreamId(streamId)
     val tag = s"stream=$streamId;batch=$batchId"
-    taggedVersion(spark, dir, tag).getOrElse(
+    versionByTag(spark, dir, tag).getOrElse(
       merge(spark, dir, changes, keyCol, partCol, opCol, statsCols,
         at = tag, bloomCols = bloomCols, bloomBits = bloomBits))
   }
-
-  /** Replay probe for the streaming tag protocol: the committed
-    * manifest version whose history header carries tag `at`, if any.
-    * O(#retained versions) tiny driver reads — the [[history]] cost;
-    * vacuum retention must stay deeper than the stream's maximum
-    * redelivery window (the [[mergeStream]] horizon contract). */
-  def taggedVersion(
-      spark: SparkSession, dir: String, tag: String): Option[Long] =
-    versions(spark, dir).sorted.find(v =>
-      headerLineOf(spark, dir, v).exists(_.contains(s""""at":"$tag"""")))
 
   private def validStreamId(streamId: String): Unit =
     require(streamId.nonEmpty && !streamId.exists(c =>
@@ -1534,7 +1524,7 @@ object PartitionedTable {
       bloomBits: Long = DefaultBloomBits): Long = {
     validStreamId(streamId)
     val tag = s"stream=$streamId;batch=$batchId"
-    taggedVersion(spark, dir, tag).getOrElse(
+    versionByTag(spark, dir, tag).getOrElse(
       append(spark, dir, df, partCol, statsCols, at = tag,
         bloomCols = bloomCols, bloomBits = bloomBits))
   }
@@ -1552,7 +1542,7 @@ object PartitionedTable {
       bloomBits: Long = DefaultBloomBits): Long = {
     validStreamId(streamId)
     val tag = s"stream=$streamId;batch=$batchId"
-    taggedVersion(spark, dir, tag).getOrElse(
+    versionByTag(spark, dir, tag).getOrElse(
       commit(spark, dir, df, partCol, statsCols, at = tag,
         bloomCols = bloomCols, bloomBits = bloomBits))
   }
@@ -2134,7 +2124,8 @@ object PartitionedTable {
     * partitions (one ranged write job over their union — partitions
     * with more bytes get proportionally more output files), and commit
     * a manifest where unflagged partitions carry their pointers (and
-    * files) over untouched. Returns the flagged partition dir names
+    * files) over untouched. Sidecars are inherited as in
+    * [[optimizePartitions]]. Returns the flagged partition dir names
     * (empty = no-op, the probe is #partitions metadata calls). */
   /** BATCH tables only: this commits a manifest at latest+1, which in a
     * [[mergeAt]] stream (manifest version = batch id) would occupy the
@@ -2150,8 +2141,7 @@ object PartitionedTable {
       cluster: Option[Column] = None,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
-      bloomBits: Long = DefaultBloomBits,
-      force: Boolean = false): Seq[String] = {
+      bloomBits: Long = DefaultBloomBits): Seq[String] = {
     require(targetBytes > 0 && smallFileRatio >= 1.0,
       s"bad policy: targetBytes=$targetBytes ratio=$smallFileRatio")
     val cur = latest(spark, dir).getOrElse(
@@ -2162,33 +2152,17 @@ object PartitionedTable {
     val flagged = m.toSeq.sortBy(_._1).filter { case (name, sv) =>
       val storeDir = storeDirOf(spark, dir, cloneSrc, name, sv)
       // DV deltas always fold: compaction is what materializes the
-      // tombstone-filtered rows back into plain full files. `force`
-      // rewrites every live partition regardless of layout — the
-      // OPTIMIZE ZORDER form, whose point is the clustering, not the
-      // file count
-      force || dvBaseOf(spark, storeDir, sv).isDefined || {
+      // tombstone-filtered rows back into plain full files
+      dvBaseOf(spark, storeDir, sv).isDefined || {
         val vdir = VersionedStore.path(storeDir, sv).toString
         val (files, bytes) = Compaction.layoutStats(spark, vdir)
         val ideal = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
         bytes > 0 && files > smallFileRatio * ideal
       }
     }
-    if (flagged.isEmpty) return Nil
-    val flaggedMap = flagged.toMap
-    val totalBytes = flagged.map { case (name, sv) =>
-      val storeDir = storeDirOf(spark, dir, cloneSrc, name, sv)
-      val eff = dvBaseOf(spark, storeDir, sv).getOrElse(sv) // deltas size by base
-      Compaction.layoutStats(spark, VersionedStore.path(storeDir, eff).toString)._2
-    }.sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = readMapped(spark, dir, flaggedMap)
-    val shapeCols = col(partCol) +: cluster.toSeq
-    val packed = df.repartitionByRange(n, shapeCols: _*)
-      .sortWithinPartitions(shapeCols: _*)
-    val committed = landPartitions(spark, dir, packed, partCol, statsCols,
-      bloomCols, bloomBits)
-    commitManifest(spark, dir, m ++ committed,
-      Some(metaLine("compact", flagged.size, (m ++ committed).size, "")))
+    if (flagged.nonEmpty)
+      rewritePartitions(spark, dir, m, flagged, cloneSrc, targetBytes,
+        partCol, cluster.toSeq, statsCols, bloomCols, bloomBits, "compact")
     flagged.map(_._1)
   }
 
@@ -2218,7 +2192,6 @@ object PartitionedTable {
       s"PartitionedTable: in-place folds rewrite INSIDE version dirs, " +
         s"which on a shallow clone may live source-side — use " +
         s"compactPartitions (copy-on-write) on $dir instead")
-    val hfs = VersionedStore.fs(spark, dir)
     val cur = latest(spark, dir).getOrElse(return Nil)
     manifest(spark, dir, cur).toSeq.sortBy(_._1).flatMap { case (name, sv) =>
       val vdirPath = VersionedStore.path(new Path(dir, name).toString, sv)
@@ -2226,31 +2199,12 @@ object PartitionedTable {
       val (files, bytes) = Compaction.layoutStats(spark, vdir)
       val ideal = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       if (bytes > 0 && files > smallFileRatio * ideal) {
-        // sidecar columns: the caller's, else whatever the existing
-        // sidecar tracked (so a mergeAt(statsCols=…)-maintained table
-        // keeps its skipping without re-stating the columns here)
-        val existing = new Path(vdirPath, StatsDir)
-        val cols =
-          if (statsCols.nonEmpty) statsCols
-          else if (hfs.exists(existing))
-            readParquet(spark, Seq(existing.toString)).columns.toSeq
-              .collect { case c if c.startsWith("min_") => c.stripPrefix("min_") }
-          else Nil
+        // the rewrite keeps the files' physical column names, so the
+        // inherited sidecar columns need no rename mapping
+        val (cols, bCols, bBits) = inheritedSidecars(spark, Seq(vdirPath),
+          statsCols, Nil, DefaultBloomBits)
         val partValue = ExternalCatalogUtils.unescapePathName(
           name.stripPrefix(s"$PartDir="))
-        // bloom sidecars regenerate through the fold too: columns and
-        // geometry come from the existing sidecar (nothing to re-state)
-        val existingBloom = new Path(vdirPath, BloomDir)
-        val (bCols, bBits) =
-          if (!hfs.exists(existingBloom)) (Nil, DefaultBloomBits)
-          else {
-            val b = spark.read.schema(BloomSidecarSchema)
-              .parquet(existingBloom.toString)
-            val cs = b.select("col").distinct()
-              .collect().map(_.getString(0)).toSeq.sorted // tracked-column-count-sized
-            if (cs.isEmpty) (Nil, DefaultBloomBits)
-            else (cs, b.agg(max("bits")).head.getLong(0))
-          }
         val stage: Option[Path => Unit] =
           if (cols.isEmpty && bCols.isEmpty) None
           else Some { tmp =>
@@ -2274,10 +2228,8 @@ object PartitionedTable {
     * unconditionally — the trigger is skipping QUALITY, not small-file
     * pressure. DV-delta partitions fold their tombstones away (the
     * rewrite materializes the anti join). Sidecar geometry is
-    * inherited when not re-stated: `statsCols` defaults to the union
-    * of columns the selected versions' `_stats` sidecars already
-    * track, and bloom columns/width come from their `_bloom` sidecars,
-    * so an OPTIMIZE can never silently strip a table's skipping.
+    * inherited when not re-stated ([[inheritedSidecars]]), so an
+    * OPTIMIZE can never silently strip a table's skipping.
     * BATCH tables only (mints latest+1 — same caveat as [[restore]]).
     * Returns the rewritten partition dir names. */
   def optimizePartitions(
@@ -2301,55 +2253,82 @@ object PartitionedTable {
     require(selected.nonEmpty,
       s"PartitionedTable: none of ${partValues.getOrElse(Nil)} exist in " +
         s"table version $cur under $dir")
-    val hfs = VersionedStore.fs(spark, dir)
-    val cloneSrc = cloneSrcOf(spark, dir)
-    // sidecars live on the version itself, or on a DV delta's base
-    def sidecarDirs(sub: String): Seq[String] = selected.flatMap {
-      case (name, sv) =>
-        val storeDir = storeDirOf(spark, dir, cloneSrc, name, sv)
-        val eff = dvBaseOf(spark, storeDir, sv).getOrElse(sv)
-        val p = new Path(VersionedStore.path(storeDir, eff), sub)
-        if (hfs.exists(p)) Some(p.toString) else None
+    rewritePartitions(spark, dir, m, selected, cloneSrcOf(spark, dir),
+      targetBytes, partCol, Seq(cluster), statsCols, bloomCols, bloomBits,
+      "optimize")
+    selected.map(_._1)
+  }
+
+  /** The copy-on-write rewrite behind [[compactPartitions]] and
+    * [[optimizePartitions]]: read the `chosen` partitions of mapping
+    * `m`, range-pack them on the partition column then `cluster` into
+    * ~`targetBytes` files, land them with the inherited sidecars and
+    * commit `m` with the chosen entries repointed as a new version. */
+  private def rewritePartitions(
+      spark: SparkSession, dir: String, m: Map[String, Long],
+      chosen: Seq[(String, Long)], cloneSrc: Option[String],
+      targetBytes: Long, partCol: String, cluster: Seq[Column],
+      statsCols: Seq[String], bloomCols: Seq[String], bloomBits: Long,
+      operation: String): Unit = {
+    // files and sidecars live on the version itself, or on a DV
+    // delta's base (deltas size by their base)
+    val baseDirs = chosen.map { case (name, sv) =>
+      val storeDir = storeDirOf(spark, dir, cloneSrc, name, sv)
+      VersionedStore.path(storeDir, dvBaseOf(spark, storeDir, sv).getOrElse(sv))
     }
     // inherited sidecar columns carry their AT-WRITE names; the rewrite
-    // below reads the CURRENT (column-mapped) schema, so each inherited
-    // name maps through the rename chain (dropped columns fall away,
-    // chain members collapse to one current name)
+    // reads the CURRENT (column-mapped) schema, so each name maps
+    // through the rename chain (dropped columns fall away, chain
+    // members collapse to one current name)
     val edges = colMapOf(spark, dir)
-    def currentNames(cs: Seq[String]): Seq[String] =
-      cs.flatMap(c => resolveName(edges, c)).distinct
-    val statDirs = sidecarDirs(StatsDir)
-    val effStats = currentNames(
-      if (statsCols.nonEmpty) statsCols
-      else if (statDirs.isEmpty) Nil
-      else readParquet(spark, statDirs)
-        .columns.toSeq
-        .collect { case c if c.startsWith("min_") => c.stripPrefix("min_") }
-        .sorted)
-    val bloomDirs = sidecarDirs(BloomDir)
-    val (effBloom, effBits) =
-      if (bloomCols.nonEmpty) (currentNames(bloomCols), bloomBits)
-      else if (bloomDirs.isEmpty) (Seq.empty[String], DefaultBloomBits)
-      else {
-        val b = spark.read.schema(BloomSidecarSchema).parquet(bloomDirs: _*)
-        (currentNames(b.select("col").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted), // tracked-column-count-sized
-          b.agg(max("bits")).head.getLong(0))
-      }
-    val totalBytes = selected.map { case (name, sv) =>
-      val storeDir = storeDirOf(spark, dir, cloneSrc, name, sv)
-      val eff = dvBaseOf(spark, storeDir, sv).getOrElse(sv) // deltas size by base
-      Compaction.layoutStats(spark, VersionedStore.path(storeDir, eff).toString)._2
-    }.sum
+    def current(cs: Seq[String]) = cs.flatMap(resolveName(edges, _)).distinct
+    val (stats, bloom, bits) = inheritedSidecars(spark, baseDirs,
+      statsCols, bloomCols, bloomBits)
+    val totalBytes = baseDirs
+      .map(p => Compaction.layoutStats(spark, p.toString)._2).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val packed = readMapped(spark, dir, selected.toMap)
-      .repartitionByRange(n, col(partCol), cluster)
-      .sortWithinPartitions(col(partCol), cluster)
-    val committed = landPartitions(spark, dir, packed, partCol, effStats,
-      effBloom, effBits)
+    val shape = col(partCol) +: cluster
+    val packed = readMapped(spark, dir, chosen.toMap)
+      .repartitionByRange(n, shape: _*)
+      .sortWithinPartitions(shape: _*)
+    val committed = landPartitions(spark, dir, packed, partCol,
+      current(stats), current(bloom), bits)
     commitManifest(spark, dir, m ++ committed,
-      Some(metaLine("optimize", selected.size, (m ++ committed).size, "")))
-    selected.map(_._1)
+      Some(metaLine(operation, chosen.size, (m ++ committed).size, "")))
+  }
+
+  /** The skipping-sidecar setup a rewrite of the version dirs `vdirs`
+    * inherits, so no layout rewrite silently strips a table's file
+    * skipping: explicit `statsCols`/`bloomCols` win; otherwise the
+    * columns the versions' `_stats` sidecars track, and the bloom
+    * columns and width of their `_bloom` sidecars. Inherited names are
+    * the AT-WRITE (physical) column names. */
+  private def inheritedSidecars(
+      spark: SparkSession, vdirs: Seq[Path], statsCols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Long): (Seq[String], Seq[String], Long) = {
+    def present(sub: String): Seq[String] = vdirs.map(new Path(_, sub))
+      .filter(p => VersionedStore.fs(spark, p.toString).exists(p))
+      .map(_.toString)
+    val stats =
+      if (statsCols.nonEmpty) statsCols
+      else present(StatsDir) match {
+        case Seq() => Nil
+        case ds => readParquet(spark, ds).columns.toSeq
+          .collect { case c if c.startsWith("min_") => c.stripPrefix("min_") }
+          .sorted
+      }
+    val (bloom, bits) =
+      if (bloomCols.nonEmpty) (bloomCols, bloomBits)
+      else present(BloomDir) match {
+        case Seq() => (Nil, DefaultBloomBits)
+        case ds =>
+          val b = spark.read.schema(BloomSidecarSchema).parquet(ds: _*)
+          val cs = b.select("col").distinct()
+            .collect().map(_.getString(0)).toSeq.sorted // tracked-column-count-sized
+          if (cs.isEmpty) (Nil, DefaultBloomBits)
+          else (cs, b.agg(max("bits")).head.getLong(0))
+      }
+    (stats, bloom, bits)
   }
 
   /** Stage a partition-version `_stats` sidecar (the [[landPartitions]]

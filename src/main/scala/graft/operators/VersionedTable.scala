@@ -325,14 +325,6 @@ object VersionedTable {
     diffFrames(read(spark, dir, asOf = Some(from)),
       read(spark, dir, asOf = Some(to)), Seq(keyCol), preImages)
 
-  /** The [[changes]] diff over two EXPLICIT snapshots — the seam the
-    * streaming merge fold uses when a version must resolve through an
-    * empty-batch schema fallback instead of a directory read. */
-  def diffFeed(
-      a: DataFrame, b: DataFrame,
-      keyCol: String, preImages: Boolean = false): DataFrame =
-    diffFrames(a, b, Seq(keyCol), preImages)
-
   /** The row-level diff two snapshots imply, keyed by `keyCols` —
     * shared by [[changes]] and the partition-aware feed
     * ([[PartitionedTable.changes]], which calls it per CHANGED

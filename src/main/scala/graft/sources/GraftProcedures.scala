@@ -152,15 +152,19 @@ object GraftProcedures {
             s"graft procedures: zorder_by takes exactly two columns " +
               s"('c1,c2'), got '$s'")
           // rank-bucketed interleave: quantile edges come from one scan
-          // of the live table, applied inside the compaction rewrite
+          // of the live table, applied inside the OPTIMIZE rewrite
           graft.operators.ZOrder.zvalueRanked(
             PartitionedTable.read(spark, spec.dir), cols(0), cols(1))
         }
-      val flagged = PartitionedTable.compactPartitions(spark, spec.dir,
-        targetBytes = input.getInt(1).toLong << 20,
-        partCol = spec.partCol.getOrElse("part"),
-        cluster = zorder,
-        force = zorder.isDefined) // ZORDER rewrites for clustering, not size
+      val targetBytes = input.getInt(1).toLong << 20
+      val partCol = spec.partCol.getOrElse("part")
+      // ZORDER rewrites every partition for clustering, not size
+      val flagged = zorder match {
+        case Some(z) => PartitionedTable.optimizePartitions(spark, spec.dir,
+          z, targetBytes = targetBytes, partCol = partCol)
+        case None => PartitionedTable.compactPartitions(spark, spec.dir,
+          targetBytes, partCol = partCol)
+      }
       result(
         ("compacted_partitions", IntegerType, flagged.size),
         ("newest_version", LongType,

@@ -84,7 +84,7 @@ class GraftStreamingWrite(
     val hfs = graft.streaming.VersionedStore.fs(spark, spec.dir)
     try {
       val tag = s"stream=$queryId;batch=$epochId"
-      if (PartitionedTable.taggedVersion(spark, spec.dir, tag).isDefined)
+      if (PartitionedTable.versionByTag(spark, spec.dir, tag).isDefined)
         return // restart redelivery of a committed epoch: no-op
       val paths = messages.collect {
         case GraftDeltaMessage(path, rows) if rows > 0 => path

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * — the front door that lets a consumer SUBSCRIBE to a table it does
   * not own (the Delta CDF read path), instead of the table's committer
   * pushing through a sink callback ([[MergeStreams]]'s `feedSink`,
-  * which only the merge driver can register).
+  * which only the merging stream can register; it pushes the same
+  * [[diff]] over its batch's pre-merge and committed manifests).
   *
   *  - [[batch]]: every change event between two table versions, one
   *    slice PER COMMIT (tagged [[VersionCol]]) — not one endpoint diff:

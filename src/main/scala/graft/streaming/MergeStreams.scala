@@ -1,94 +1,45 @@
 package graft.streaming
 
+import graft.operators.PartitionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-/** Streaming MERGE: a CDC changelog applied to a snapshot-versioned
-  * table as batches ARRIVE — the streaming counterpart of
-  * [[graft.operators.VersionedTable.merge]] (q78), closing the
-  * lakehouse loop: batch MERGE INTO + an exactly-once streaming apply.
+/** Streaming MERGE: a CDC changelog applied to a partition-scoped
+  * [[graft.operators.PartitionedTable]] as batches ARRIVE — the
+  * streaming counterpart of the batch
+  * [[graft.operators.PartitionedTable.merge]].
   *
-  * Each micro-batch is first collapsed to last-wins per key WITHIN the
-  * batch (q48's ranked pattern, ordered by `orderCols`), then merged
-  * into the pre-batch snapshot — matched keys replaced or deleted,
-  * unmatched upserts inserted — and the result commits as version
-  * `batchId` of a [[VersionedStore]] FULL-SNAPSHOT store:
+  * Each micro-batch is gated by the optional expectations, collapsed
+  * to last-wins per (partition, key) WITHIN the batch (ordered by
+  * `orderCols`), and landed through [[PartitionedTable.mergeAt]] — the
+  * one merge core — which rewrites ONLY the touched partitions and
+  * commits the manifest at the batch id:
   *
   *  - exactly-once APPLY under at-least-once delivery: a retried batch
-  *    merges against the newest version OLDER than its id (its true
-  *    pre-merge state, still on disk) and the commit no-ops if its own
-  *    version already landed — so a redelivered changelog batch can
-  *    never double-apply an increment or resurrect a deleted key;
-  *  - a crash mid-merge leaves only an invisible temp dir; the prior
-  *    snapshot stays the newest committed version;
-  *  - superseded versions are pruned only after this batch's commit
-  *    lands, so a concurrent retry always finds its pre-batch state.
+  *    merges against the newest manifest OLDER than its id and no-ops
+  *    if its own manifest already landed — a redelivered changelog
+  *    batch can never double-apply or resurrect a deleted key;
+  *  - a crash mid-merge leaves only orphan store versions; the prior
+  *    manifest stays the newest committed version;
+  *  - after each committed batch the table vacuums to a 2-manifest
+  *    horizon, which keeps the batch's pre-merge manifest for a retry
+  *    of the same id and for the CDC feed.
   *
-  * Cross-batch ordering is commit order (the streaming semantic:
-  * batches apply in arrival order); within a batch, `orderCols`
-  * decides. Scale shape: one window over the BATCH (changelog-sized)
-  * for the collapse, one broadcast anti join of the (batch-sized)
-  * change keys against the snapshot — the table never shuffles — and
-  * the copy-on-write granularity is the store (point it at a partition
-  * directory to localize rewrites, the [[graft.operators.Compaction]]
-  * rule).
+  * Cross-batch ordering is commit order (batches apply in arrival
+  * order); within a batch, `orderCols` decides.
   */
 object MergeStreams {
 
   /** Relay changelog files from `sourceDir` into the merge fold at
-    * `storeDir`. `changes` rows carry the table's columns plus
+    * `tableDir`. `changes` rows carry the table's columns plus
     * `opCol` ∈ {"upsert", "delete"} (any other value fails the batch
     * loudly — a typo'd op must not silently delete); `orderCols` break
     * last-wins ties within a batch (make them total, e.g. a change
     * sequence number). Blocks until the AvailableNow drain finishes. */
   def mergeMaintain(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      storeDir: String,
-      checkpointDir: String,
-      keyCol: String,
-      opCol: String,
-      orderCols: Seq[String],
-      feedSink: Option[(DataFrame, Long) => Unit] = None,
-      compactTargetBytes: Option[Long] = None,
-      expectations: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      quarantineDir: Option[String] = None): Unit = {
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch.sparkSession, storeDir, batch, id,
-          keyCol, opCol, orderCols, feedSink, compactTargetBytes,
-          expectations, quarantineDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The table's current state: the newest committed snapshot (empty —
-    * no rows, no schema commitment — before any batch has landed). */
-  def tableState(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    VersionedStore.versions(spark, storeDir).maxOption.map(v =>
-      spark.read.parquet(VersionedStore.path(storeDir, v).toString))
-
-  /** Streaming MERGE into a PARTITION-SCOPED table — the true 100 TB
-    * CDC shape: each micro-batch collapses last-wins per
-    * (partition, key), then [[graft.operators.PartitionedTable.mergeAt]]
-    * rewrites ONLY the touched partitions and commits the manifest at
-    * the batch id (exactly-once under redelivery: a retried batch
-    * merges against the newest manifest older than its id and no-ops
-    * if its own landed). After each committed batch the table vacuums
-    * to a 2-manifest horizon — pruning superseded manifests AND
-    * garbage-collecting orphan store versions from any crashed earlier
-    * attempt. Blocks until the AvailableNow drain finishes. */
-  def mergePartitionedMaintain(
       spark: SparkSession,
       sourceDir: String,
       schema: StructType,
@@ -110,7 +61,7 @@ object MergeStreams {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergePartitionedBatch(batch.sparkSession, tableDir, batch, id,
+        mergeBatch(batch.sparkSession, tableDir, batch, id,
           keyCol, partCol, opCol, orderCols, expectations, quarantineDir,
           compactTargetBytes, feedSink, statsCols)
       }
@@ -118,11 +69,22 @@ object MergeStreams {
     q.awaitTermination()
   }
 
-  /** One (possibly retried) micro-batch of the partitioned merge fold.
+  /** One (possibly retried) micro-batch of the merge fold.
     * Package-visible so the spec can drive duplicate deliveries.
-    * Expectations gate exactly as in [[mergeBatch]]: dirty upserts
-    * quarantine per-rule before the collapse, deletes pass ungated. */
-  private[streaming] def mergePartitionedBatch(
+    *
+    * Expectations gate BEFORE the collapse: an upsert violating a rule
+    * is quarantined and never participates — an earlier clean change
+    * for the same key wins the collapse instead. Deletes carry no data
+    * and pass ungated. Quarantined rows (with their per-rule `violated`
+    * tags) commit as version `id` of the quarantine [[VersionedStore]],
+    * so a redelivered batch never double-quarantines.
+    *
+    * A registered `feedSink` receives the pre-image change feed between
+    * the batch's pre-merge manifest and its own — untouched partitions
+    * are never scanned. A redelivered batch recomputes it from the same
+    * manifest pair, so the sink sees byte-identical rows: make it
+    * idempotent per batch id. With no sink the feed is never computed. */
+  private[streaming] def mergeBatch(
       spark: SparkSession,
       tableDir: String,
       batch: DataFrame,
@@ -136,12 +98,11 @@ object MergeStreams {
       compactTargetBytes: Option[Long] = None,
       feedSink: Option[(DataFrame, Long) => Unit] = None,
       statsCols: Seq[String] = Nil): Unit = {
-    import graft.operators.PartitionedTable
     val gated =
       if (expectations.isEmpty) batch
       else {
         val qDir = quarantineDir.getOrElse(throw new IllegalArgumentException(
-          "mergePartitionedBatch: expectations require a quarantineDir"))
+          "mergeBatch: expectations require a quarantineDir"))
         // null-safe split (<=>): a NULL op must fall through to the
         // fail-loud op validation in the merge, not vanish between two
         // null-filtering predicates
@@ -170,19 +131,18 @@ object MergeStreams {
         PartitionedTable.compactPartitionsInPlace(spark, tableDir, t,
           statsCols = statsCols): Unit)
     }
-    // CDC out (computed only for a registered sink): the PARTITION-AWARE
-    // pre-image feed between the batch's pre-merge manifest and its own
-    // — untouched partitions are never scanned. A redelivered batch
-    // recomputes from the same manifest pair (the horizon keeps it), so
-    // the sink sees byte-identical rows: idempotent-per-id, the same
-    // contract as the flat stream's feed.
     feedSink.foreach { sink =>
+      val prior = PartitionedTable.versions(spark, tableDir).filter(_ < id).maxOption
       // A no-op micro-batch (empty source file, everything quarantined,
       // all-null partition values) commits a manifest identical to its
       // predecessor — or an EMPTY manifest on the first batch. The feed
-      // is then provably empty; emit an empty frame with the feed's
-      // schema (derived from the collapsed batch) instead of letting
-      // changes()/read() trip over an empty partition mapping.
+      // is then provably empty; ChangeFeed.diff cannot shape it from an
+      // empty partition mapping, so derive the feed's schema from the
+      // collapsed batch instead.
+      val unchanged = prior match {
+        case Some(p) => PartitionedTable.changedPartitions(spark, tableDir, p, id).isEmpty
+        case None => PartitionedTable.manifest(spark, tableDir, id).isEmpty
+      }
       def emptyFeed: DataFrame = {
         val t = collapsed.drop(opCol).limit(0)
         val payload = t.columns.toSeq
@@ -190,161 +150,10 @@ object MergeStreams {
         t.select(Seq(col(partCol), col(keyCol),
           lit("insert").as("op")) ++ payload.map(col): _*)
       }
-      val feed = PartitionedTable.versions(spark, tableDir)
-        .filter(_ < id).maxOption match {
-        case Some(prior)
-            if PartitionedTable.changedPartitions(
-              spark, tableDir, prior, id).nonEmpty =>
-          PartitionedTable.changes(spark, tableDir, prior, id,
-            keyCol, partCol, preImages = true)
-        case Some(_) => emptyFeed
-        case None
-            if PartitionedTable.manifest(spark, tableDir, id).nonEmpty =>
-          val committed = PartitionedTable.read(spark, tableDir, Some(id))
-          val payload = committed.columns.toSeq
-            .filterNot(c => c == keyCol || c == partCol)
-          committed.select(Seq(col(partCol), col(keyCol),
-            lit("insert").as("op")) ++ payload.map(col): _*)
-        case None => emptyFeed
-      }
-      sink(feed.localCheckpoint(true), id)
-    }
-  }
-
-  /** One (possibly retried) micro-batch of the merge fold.
-    * Package-visible so the spec can drive a duplicate delivery.
-    *
-    * After the batch's version is committed (or found already
-    * committed — the retry), a registered `feedSink` receives the
-    * pre-image change feed between the batch's pre-merge version and
-    * its own — the CDC OUT side: a downstream view maintainer
-    * ([[graft.operators.VersionedTable.maintainSumCount]]) or replica
-    * consumes it without rescanning the table. A redelivered batch
-    * recomputes the feed from the SAME version pair (the pre-merge
-    * version is never pruned past the retry horizon), so the sink sees
-    * byte-identical rows — make it idempotent per batch id, the same
-    * contract as every emitting stream here (PackStreams,
-    * CorpusStreams). With NO sink registered (`None`, the default) the
-    * feed — a full-outer join of two table snapshots — is never
-    * computed at all: a consumer-less merge stream pays only the merge
-    * itself, never a table-sized diff per micro-batch. */
-  private[streaming] def mergeBatch(
-      spark: SparkSession,
-      storeDir: String,
-      batch: DataFrame,
-      id: Long,
-      keyCol: String,
-      opCol: String,
-      orderCols: Seq[String],
-      feedSink: Option[(DataFrame, Long) => Unit] = None,
-      compactTargetBytes: Option[Long] = None,
-      expectations: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      quarantineDir: Option[String] = None): Unit = {
-    // Expectations gate BEFORE the collapse (the q80 fail-closed split
-    // streamed): an upsert row violating a rule is quarantined and
-    // never participates — an earlier clean change for the same key
-    // wins the collapse instead, exactly as if the dirty row had never
-    // arrived. Deletes carry no data and pass ungated. Quarantined rows
-    // commit (with their per-rule `violated` tags) as version `id` of
-    // the sibling quarantine store — the same exactly-once contract as
-    // the table itself, so a redelivered batch never double-quarantines.
-    val gated =
-      if (expectations.isEmpty) batch
-      else {
-        val qDir = quarantineDir.getOrElse(throw new IllegalArgumentException(
-          "mergeBatch: expectations require a quarantineDir"))
-        // null-safe split (<=>): a NULL op must reach checkedOp's
-        // raise_error below, not vanish between two null-filtering
-        // predicates (=== and =!= both drop nulls)
-        val (clean, dirty) = graft.operators.Expectations.split(
-          batch.filter(col(opCol) <=> "upsert"), expectations)
-        VersionedStore.commit(spark, qDir, id, dirty.localCheckpoint(true)): Unit
-        clean.unionByName(batch.filter(!(col(opCol) <=> "upsert")))
-      }
-    // last-wins collapse WITHIN the batch: one window over the
-    // changelog batch, ordered by the caller's total order
-    val w = Window.partitionBy(keyCol)
-      .orderBy(orderCols.map(col(_).desc): _*)
-    val collapsed = gated
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint(true) // reused: keys, upserts; batch-sized
-    // fail-loud op validation: the filter evaluates this expression for
-    // EVERY collapsed row (both branches below go through `upserts`),
-    // so an unknown op raises instead of silently deleting the key
-    val checkedOp = when(col(opCol).isin("upsert", "delete"), col(opCol))
-      .otherwise(raise_error(concat(
-        lit(s"MergeStreams: $opCol must be upsert|delete, got "),
-        coalesce(col(opCol), lit("NULL")))))
-    val upserts = collapsed.filter(checkedOp === "upsert")
-      .drop(opCol).drop(orderCols: _*)
-    // pre-batch state: the newest version older than this id — on a
-    // retry, the batch's own landed version is ignored
-    val prior = VersionedStore.versions(spark, storeDir).filter(_ < id)
-    val merged = prior.maxOption match {
-      case Some(v) =>
-        val vdir = VersionedStore.path(storeDir, v).toString
-        // a version committed by an empty batch holds no data files —
-        // reading it would fail schema inference; its content is the
-        // empty table with the changelog's (op-less) schema
-        val base =
-          if (graft.operators.Compaction.layoutStats(spark, vdir)._1 == 0)
-            upserts.limit(0)
-          else spark.read.parquet(vdir)
-        base.join(broadcast(collapsed.select(keyCol).distinct()),
-            Seq(keyCol), "left_anti")
-          .unionByName(upserts)
-      case None => upserts // deletes against an empty table are no-ops
-    }
-    if (VersionedStore.commit(spark, storeDir, id,
-        merged.localCheckpoint(true))) {
-      // superseded: everything older than this batch's own pre-merge
-      // state (which a retry of THIS id still needs)
-      VersionedStore.prune(spark, storeDir, prior.sorted.dropRight(1))
-      // incremental auto-compaction (the s19→s34 flag-then-rewrite,
-      // streaming flavor): every merge commit inherits the shuffle's
-      // file count, so small files accrete version over version. When
-      // the just-committed snapshot exceeds 2x its bin-packed ideal,
-      // fold it IN PLACE (content-identical layout rewrite behind
-      // Compaction's crash-safe swap) — the version id stays the batch
-      // id, so exactly-once resolution and retries are untouched; the
-      // store's versions carry no sidecars, so the swap loses nothing.
-      // Only the committing call compacts (a retry skips with commit).
-      compactTargetBytes.foreach { target =>
-        val vdir = VersionedStore.path(storeDir, id).toString
-        val (files, bytes) = graft.operators.Compaction.layoutStats(spark, vdir)
-        val ideal = math.max(1, math.ceil(bytes.toDouble / target).toInt)
-        if (bytes > 0 && files > 2.0 * ideal)
-          graft.operators.Compaction.compact(spark, vdir, target)
-      }
-    }
-    // CDC out, computed ONLY when a sink is registered (the feed is a
-    // full-outer join of two table snapshots — never pay it for a
-    // no-op sink). Against an empty store every committed row is an
-    // insert (the diff from nothing), keeping the feed's shape
-    // identical to changes().
-    feedSink.foreach { sink =>
-      // A version committed by an empty (first) batch holds no data
-      // files; reading such a dir fails schema inference. Resolve any
-      // version to a frame with the empty-table fallback (the changelog's
-      // op-less schema) so the feed survives empty batches at any point.
-      def versionFrame(v: Long): DataFrame = {
-        val vdir = VersionedStore.path(storeDir, v).toString
-        if (graft.operators.Compaction.layoutStats(spark, vdir)._1 == 0)
-          collapsed.drop(opCol).drop(orderCols: _*).limit(0)
-        else spark.read.parquet(vdir)
-      }
-      def insertShaped(df: DataFrame): DataFrame = {
-        val payload = df.columns.toSeq.filterNot(_ == keyCol)
-        df.select(Seq(col(keyCol), lit("insert").as("op")) ++
-          payload.map(col): _*)
-      }
-      val feed = prior.maxOption match {
-        case Some(v) =>
-          graft.operators.VersionedTable.diffFeed(
-            versionFrame(v), versionFrame(id), keyCol, preImages = true)
-        case None => insertShaped(versionFrame(id))
-      }
+      val feed =
+        if (unchanged) emptyFeed
+        else ChangeFeed.diff(spark, tableDir, keyCol, partCol,
+          prior.getOrElse(-1L), id, preImages = true)
       sink(feed.localCheckpoint(true), id)
     }
   }

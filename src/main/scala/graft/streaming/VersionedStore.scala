@@ -4,8 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** batchId-versioned parquet state store for `foreachBatch` folds — the
-  * durability seam shared by the Bloom screen ([[CorpusStreams]]) and the
-  * packing stream ([[PackStreams]]). foreachBatch is at-least-once and a
+  * durability seam shared by the Bloom screen ([[CorpusStreams]]), the
+  * packing stream ([[PackStreams]]) and the streaming MERGE's quarantine
+  * ([[MergeStreams]], whose table itself is a
+  * [[graft.operators.PartitionedTable]]). foreachBatch is at-least-once and a
   * plain `mode("overwrite")` is non-atomic, so state is written as
   * immutable per-batch version directories instead:
   *

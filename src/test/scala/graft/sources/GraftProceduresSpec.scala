@@ -142,6 +142,46 @@ class GraftProceduresSpec extends SparkSpec {
       s"z-ordered files must tighten per-file spans: $spanBefore -> $spanAfter")
   }
 
+  test("CALL optimize keeps the table's stats and bloom sidecars, plain and zorder_by alike") {
+    Seq("" -> "compact", ", zorder_by => 'a,b'" -> "optimize").foreach {
+      case (zorderArg, operation) =>
+        val (dir, t) = fresh()
+        PartitionedTable.commit(spark, dir,
+          spark.range(4096).select(col("id").as("k"), lit("p0").as("part"),
+            (col("id") % 64).as("a"), ((col("id") * 37) % 64).as("b"))
+            .repartition(8), "part", statsCols = Seq("a"), bloomCols = Seq("k"))
+        val hfs = graft.streaming.VersionedStore.fs(spark, dir)
+        def sidecars: Map[String, Seq[String]] = {
+          val v = PartitionedTable.latest(spark, dir).get
+          val vdir = graft.streaming.VersionedStore.path(s"$dir/__part=p0",
+            PartitionedTable.manifest(spark, dir, v)("__part=p0"))
+          val stats = new org.apache.hadoop.fs.Path(vdir, "_stats")
+          val bloom = new org.apache.hadoop.fs.Path(vdir, "_bloom")
+          Map(
+            "_stats" -> (if (!hfs.exists(stats)) Nil
+              else spark.read.parquet(stats.toString).columns.toSeq
+                .filter(_.startsWith("min_")).sorted),
+            "_bloom" -> (if (!hfs.exists(bloom)) Nil
+              else spark.read.parquet(bloom.toString).select("col").distinct()
+                .collect().map(_.getString(0)).toSeq))
+        }
+        val tracked = Map("_stats" -> Seq("min_a"), "_bloom" -> Seq("k"))
+        assert(sidecars === tracked)
+        val row = spark.sql(s"CALL graft.system.optimize(table => '$t', " +
+          s"target_mb => 1$zorderArg)").head()
+        assert(row.getInt(0) === 1)
+        assert(PartitionedTable.history(spark, dir).orderBy(col("version").desc)
+          .head().getAs[String]("operation") === operation)
+        assert(sidecars === tracked,
+          s"optimize$zorderArg must keep the table's skipping sidecars")
+        // reads through the inherited sidecars stay exact
+        assert(PartitionedTable.readWhere(spark, dir, "a", lit(10L), lit(12L))
+          .count() === 4096 / 64 * 3)
+        assert(PartitionedTable.readEq(spark, dir, "k", lit(17L))
+          .select("a").as[Long].collect().toSeq === Seq(17L))
+    }
+  }
+
   test("CALL restore commits a past version's content as the new version; SHOW PROCEDURES lists the surface") {
     val (dir, t) = fresh()
     PartitionedTable.commit(spark, dir,

@@ -11,213 +11,9 @@ import org.apache.spark.sql.functions._
   */
 class MergeStreamsSpec extends SparkSpec {
 
-  private def state(store: String): Map[Long, Long] =
-    MergeStreams.tableState(spark, store).get
+  private def state(table: String): Map[Long, Long] =
+    graft.operators.PartitionedTable.read(spark, table)
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-
-  test("file-relay merge: collapse within batch, upsert/delete across batches, == batch merge") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("merge-stream").toString
-    val (src, store, ckpt) = (s"$base/src", s"$base/store", s"$base/ckpt")
-
-    // batch 1: keys 1..4 inserted; key 2 appears twice — seq 11 wins
-    val b1 = Seq(
-      (1L, 10L, 1L, "upsert"), (2L, 20L, 2L, "upsert"),
-      (2L, 21L, 11L, "upsert"), (3L, 30L, 3L, "upsert"),
-      (4L, 40L, 4L, "upsert")).toDF("k", "v", "seq", "op")
-    // batch 2: update 1, delete 3, insert 5; delete-then-reinsert of 4
-    val b2 = Seq(
-      (1L, 11L, 5L, "upsert"), (3L, 0L, 6L, "delete"),
-      (5L, 50L, 7L, "upsert"), (4L, 0L, 8L, "delete"),
-      (4L, 44L, 9L, "upsert")).toDF("k", "v", "seq", "op")
-
-    b1.write.mode("append").parquet(src)
-    MergeStreams.mergeMaintain(spark, src, b1.schema, store, ckpt,
-      "k", "op", Seq("seq"))
-    assert(state(store) === Map(1L -> 10L, 2L -> 21L, 3L -> 30L, 4L -> 40L))
-
-    b2.write.mode("append").parquet(src)
-    MergeStreams.mergeMaintain(spark, src, b2.schema, store, ckpt,
-      "k", "op", Seq("seq"))
-    assert(state(store) === Map(1L -> 11L, 2L -> 21L, 4L -> 44L, 5L -> 50L),
-      "update applied, delete dropped, insert landed, delete-then-reinsert kept the reinsert")
-
-    // equality with the BATCH merge path: replay the same two batches
-    // through VersionedTable.merge (collapsing each batch the same way)
-    val batchStore = s"$base/batch"
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy(col("seq").desc)
-    def collapsed(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn", "seq")
-    graft.operators.VersionedTable.commit(spark, batchStore,
-      collapsed(b1).filter(col("op") === "upsert").drop("op"))
-    graft.operators.VersionedTable.merge(spark, batchStore, collapsed(b2), "k")
-    val batchState = graft.operators.VersionedTable.read(spark, batchStore)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(state(store) === batchState,
-      "streamed merge must equal the batch merge of the same changelog")
-  }
-
-  test("a sum/count view maintained from the emitted feeds equals recompute; retries re-emit identical feeds") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("merge-feed").toString + "/store"
-    // table (k, g, v); changelog adds op + seq
-    val b0 = Seq(
-      (1L, 0L, 10L, 1L, "upsert"), (2L, 1L, 20L, 2L, "upsert"),
-      (3L, 0L, 30L, 3L, "upsert"), (4L, 1L, 40L, 4L, "upsert")
-    ).toDF("k", "g", "v", "seq", "op")
-    // update 1 (+990), move 2 to group 0, delete 3, insert 5
-    val b1 = Seq(
-      (1L, 0L, 1000L, 5L, "upsert"), (2L, 0L, 20L, 6L, "upsert"),
-      (3L, 0L, 0L, 7L, "delete"), (5L, 2L, 50L, 8L, "upsert")
-    ).toDF("k", "g", "v", "seq", "op")
-
-    val feeds = collection.mutable.Map[Long, Seq[(Long, String, Long, Long)]]()
-    def sink(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      feeds(id) = df.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toSeq
-
-    var view = spark.range(0).select(col("id").as("g"),
-      col("id").as("sum_v"), col("id").as("n"))
-    def viewRows = view.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    def recompute = MergeStreams.tableState(spark, store).get
-      .groupBy("g").agg(sum("v").as("sum_v"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-
-    MergeStreams.mergeBatch(spark, store, b0, 0L, "k", "op", Seq("seq"), Some(sink))
-    view = graft.operators.VersionedTable
-      .maintainSumCount(view, feeds(0L).toDF("k", "op", "g", "v"), "g", "v")
-      .localCheckpoint(true)
-    assert(viewRows === recompute, "view after batch 0 must equal recompute")
-
-    MergeStreams.mergeBatch(spark, store, b1, 1L, "k", "op", Seq("seq"), Some(sink))
-    val firstFeed1 = feeds(1L)
-    view = graft.operators.VersionedTable
-      .maintainSumCount(view, firstFeed1.toDF("k", "op", "g", "v"), "g", "v")
-      .localCheckpoint(true)
-    assert(viewRows === recompute, "view after batch 1 must equal recompute")
-    assert(viewRows === Seq((0L, 1020L, 2L), (1L, 40L, 1L), (2L, 50L, 1L)))
-
-    // a redelivered batch re-emits the byte-identical feed (computed
-    // from the same pre-merge version), so an idempotent-per-id sink
-    // applies it once
-    MergeStreams.mergeBatch(spark, store, b1, 1L, "k", "op", Seq("seq"), Some(sink))
-    assert(feeds(1L) === firstFeed1, "retry must re-emit the identical feed")
-  }
-
-  test("incremental auto-compaction folds small-file snapshots without changing state or retry semantics") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("merge-compact").toString + "/store"
-    def layout(id: Long) = graft.operators.Compaction.layoutStats(
-      spark, VersionedStore.path(store, id).toString)
-
-    // each batch lands 64 keys; the shuffle shreds every snapshot
-    def batchDf(b: Long) = spark.range(64)
-      .select((col("id") + b * 64).as("k"), (col("id") + b).as("v"),
-        lit(b).as("seq"), lit("upsert").as("op")).repartition(8)
-    val target = 32L * 1024 * 1024 // any snapshot here is far below one file's worth
-
-    MergeStreams.mergeBatch(spark, store, batchDf(0), 0L, "k", "op", Seq("seq"),
-      compactTargetBytes = Some(target))
-    MergeStreams.mergeBatch(spark, store, batchDf(1), 1L, "k", "op", Seq("seq"),
-      compactTargetBytes = Some(target))
-    val (files1, _) = layout(1L)
-    assert(files1 <= 2, s"auto-compaction must fold the 8-file shred, got $files1")
-    assert(state(store).size === 128)
-    assert(state(store)(70L) === 7L)
-
-    // redelivery after an in-place fold: same id, same content, no new version
-    val before = state(store)
-    MergeStreams.mergeBatch(spark, store, batchDf(1), 1L, "k", "op", Seq("seq"),
-      compactTargetBytes = Some(target))
-    assert(state(store) === before)
-    assert(VersionedStore.versions(spark, store).sorted === Seq(0L, 1L))
-
-    // and equal to the uncompacted run of the same changelog
-    val plain = Files.createTempDirectory("merge-plain").toString + "/store"
-    MergeStreams.mergeBatch(spark, plain, batchDf(0), 0L, "k", "op", Seq("seq"))
-    MergeStreams.mergeBatch(spark, plain, batchDf(1), 1L, "k", "op", Seq("seq"))
-    assert(state(store) === state(plain),
-      "auto-compaction is layout-only; folded and plain stores must agree")
-  }
-
-  test("streaming expectations gate: dirty upserts quarantine per-rule before the merge, == batch gate, retry-safe") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("merge-gate").toString
-    val (store, qdir) = (s"$base/store", s"$base/quarantine")
-    val rules = Seq(
-      "v_positive" -> (col("v") > 0L),
-      "v_small" -> (col("v") < 1000L))
-
-    // batch 0: k=2's LAST change is dirty (v=-5) — quarantined, so the
-    // earlier clean change (v=20) wins the collapse; k=3 fails
-    // v_positive; k=5 fails v_small; k=6's NULL fails BOTH (fail-closed)
-    val b0 = Seq(
-      (1L, Some(10L), 1L, "upsert"), (2L, Some(20L), 2L, "upsert"),
-      (2L, Some(-5L), 3L, "upsert"), (3L, Some(-2000L), 4L, "upsert"),
-      (5L, Some(5000L), 5L, "upsert"), (6L, None, 6L, "upsert")
-    ).toDF("k", "v", "seq", "op")
-    MergeStreams.mergeBatch(spark, store, b0, 0L, "k", "op", Seq("seq"),
-      expectations = rules, quarantineDir = Some(qdir))
-    assert(state(store) === Map(1L -> 10L, 2L -> 20L),
-      "dirty rows must not apply; the earlier clean change wins the collapse")
-
-    // batch 1: delete passes ungated even though v violates the rules
-    val b1 = Seq((1L, Some(-999L), 7L, "delete"), (4L, Some(40L), 8L, "upsert"))
-      .toDF("k", "v", "seq", "op")
-    MergeStreams.mergeBatch(spark, store, b1, 1L, "k", "op", Seq("seq"),
-      expectations = rules, quarantineDir = Some(qdir))
-    assert(state(store) === Map(2L -> 20L, 4L -> 40L),
-      "deletes carry no data and must pass the gate")
-
-    // quarantine rides the same versioned store, tagged per rule
-    def quarantined(id: Long) = spark.read
-      .parquet(VersionedStore.path(qdir, id).toString)
-      .select(col("k"), col("violated")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
-    assert(quarantined(0L) === Map(
-      2L -> Set("v_positive"), 3L -> Set("v_positive"),
-      5L -> Set("v_small"), 6L -> Set("v_positive", "v_small")))
-    assert(quarantined(1L) === Map.empty)
-
-    // redelivery: no state change, no new quarantine version, same tags
-    MergeStreams.mergeBatch(spark, store, b0, 0L, "k", "op", Seq("seq"),
-      expectations = rules, quarantineDir = Some(qdir))
-    assert(state(store) === Map(2L -> 20L, 4L -> 40L))
-    assert(VersionedStore.versions(spark, qdir).sorted === Seq(0L, 1L))
-    assert(quarantined(0L) === Map(
-      2L -> Set("v_positive"), 3L -> Set("v_positive"),
-      5L -> Set("v_small"), 6L -> Set("v_positive", "v_small")))
-
-    // streamed == batch: the same changelog through split + flat merge
-    val flat = s"$base/flat"
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy(col("seq").desc)
-    def gateCollapse(df: org.apache.spark.sql.DataFrame) = {
-      val (clean, _) = graft.operators.Expectations.split(
-        df.filter(col("op") === "upsert"), rules)
-      clean.unionByName(df.filter(col("op") =!= "upsert"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn", "seq")
-    }
-    graft.operators.VersionedTable.commit(spark, flat,
-      gateCollapse(b0).filter(col("op") === "upsert").drop("op"))
-    graft.operators.VersionedTable.merge(spark, flat, gateCollapse(b1), "k")
-    val flatState = graft.operators.VersionedTable.read(spark, flat)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(state(store) === flatState,
-      "the streamed gate+merge must equal the batch gate+merge")
-
-    // expectations without a quarantine store are refused
-    intercept[IllegalArgumentException] {
-      MergeStreams.mergeBatch(spark, store, b1, 2L, "k", "op", Seq("seq"),
-        expectations = rules)
-    }
-  }
 
   test("partitioned streaming merge: touched-partition rewrites, exactly-once redelivery, == batch merge") {
     import graft.operators.PartitionedTable
@@ -229,18 +25,21 @@ class MergeStreamsSpec extends SparkSpec {
     val b1 = Seq(
       (1L, "p0", 10L, 1L, "upsert"), (2L, "p1", 20L, 2L, "upsert"),
       (2L, "p1", 21L, 11L, "upsert"), (3L, "p2", 30L, 3L, "upsert"),
-      (4L, "p0", 40L, 4L, "upsert")).toDF("k", "part", "v", "seq", "op")
-    // batch 2 touches ONLY p1: update 2, insert 5
+      (4L, "p0", 40L, 4L, "upsert"), (6L, "p1", 60L, 5L, "upsert"),
+      (7L, "p1", 70L, 6L, "upsert")).toDF("k", "part", "v", "seq", "op")
+    // batch 2 touches ONLY p1: update 2, insert 5, delete 6;
+    // delete-then-reinsert of 7
     val b2 = Seq(
-      (2L, "p1", 22L, 5L, "upsert"), (5L, "p1", 50L, 6L, "upsert")
+      (2L, "p1", 22L, 5L, "upsert"), (5L, "p1", 50L, 6L, "upsert"),
+      (6L, "p1", 0L, 7L, "delete"), (7L, "p1", 0L, 8L, "delete"),
+      (7L, "p1", 77L, 9L, "upsert")
     ).toDF("k", "part", "v", "seq", "op")
 
     b1.write.mode("append").parquet(src)
-    MergeStreams.mergePartitionedMaintain(spark, src, b1.schema, table, ckpt,
+    MergeStreams.mergeMaintain(spark, src, b1.schema, table, ckpt,
       "k", "part", "op", Seq("seq"))
-    def tableState = PartitionedTable.read(spark, table)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(tableState === Map(1L -> 10L, 2L -> 21L, 3L -> 30L, 4L -> 40L))
+    assert(state(table) === Map(1L -> 10L, 2L -> 21L, 3L -> 30L, 4L -> 40L,
+      6L -> 60L, 7L -> 70L))
 
     // p0/p2 files before the p1-only batch
     def files(part: String) = {
@@ -255,18 +54,21 @@ class MergeStreamsSpec extends SparkSpec {
     val before = Seq("__part=p0", "__part=p2").map(p => p -> files(p)).toMap
 
     b2.write.mode("append").parquet(src)
-    MergeStreams.mergePartitionedMaintain(spark, src, b2.schema, table, ckpt,
+    MergeStreams.mergeMaintain(spark, src, b2.schema, table, ckpt,
       "k", "part", "op", Seq("seq"))
-    assert(tableState === Map(1L -> 10L, 2L -> 22L, 3L -> 30L, 4L -> 40L, 5L -> 50L))
+    val afterB2 = Map(1L -> 10L, 2L -> 22L, 3L -> 30L, 4L -> 40L, 5L -> 50L,
+      7L -> 77L)
+    assert(state(table) === afterB2,
+      "update applied, delete dropped, insert landed, delete-then-reinsert kept the reinsert")
     before.foreach { case (p, fs0) =>
       assert(files(p) === fs0, s"untouched partition $p was rewritten by the stream")
     }
 
     // redelivery of batch 1 (driven directly): exactly-once no-op
     val manifests = PartitionedTable.versions(spark, table).sorted
-    MergeStreams.mergePartitionedBatch(spark, table, b1, manifests.head,
+    MergeStreams.mergeBatch(spark, table, b1, manifests.head,
       "k", "part", "op", Seq("seq"))
-    assert(tableState === Map(1L -> 10L, 2L -> 22L, 3L -> 30L, 4L -> 40L, 5L -> 50L))
+    assert(state(table) === afterB2)
     assert(PartitionedTable.versions(spark, table).sorted === manifests,
       "a redelivered batch must not mint a manifest")
 
@@ -280,15 +82,13 @@ class MergeStreamsSpec extends SparkSpec {
     PartitionedTable.commit(spark, flat,
       collapsed(b1).filter(col("op") === "upsert").drop("op"), "part")
     PartitionedTable.merge(spark, flat, collapsed(b2), "k", "part")
-    val batchState = PartitionedTable.read(spark, flat)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(tableState === batchState,
+    assert(state(table) === state(flat),
       "streamed partitioned merge must equal the batch merge")
 
     // manifest-driven partition pruning reads only the asked partition
     val p1Only = PartitionedTable.readPartitions(spark, table, Seq("p1"))
     assert(p1Only.inputFiles.forall(_.contains("__part=p1")))
-    assert(p1Only.collect().map(_.getAs[Long]("k")).toSet === Set(2L, 5L))
+    assert(p1Only.collect().map(_.getAs[Long]("k")).toSet === Set(2L, 5L, 7L))
 
     // the gated partitioned stream quarantines dirty upserts per-rule
     val (gTable, gQuar) = (s"$base/gated", s"$base/gquar")
@@ -296,7 +96,7 @@ class MergeStreamsSpec extends SparkSpec {
     val gb = Seq(
       (1L, "p0", 10L, 1L, "upsert"), (2L, "p1", -5L, 2L, "upsert")
     ).toDF("k", "part", "v", "seq", "op")
-    MergeStreams.mergePartitionedBatch(spark, gTable, gb, 0L,
+    MergeStreams.mergeBatch(spark, gTable, gb, 0L,
       "k", "part", "op", Seq("seq"), rules, Some(gQuar))
     assert(PartitionedTable.read(spark, gTable)
       .collect().map(_.getAs[Long]("k")).toSet === Set(1L))
@@ -304,6 +104,80 @@ class MergeStreamsSpec extends SparkSpec {
       .select("k", "violated").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     assert(quar === Map(2L -> Set("v_positive")))
+  }
+
+  test("streaming expectations gate: dirty upserts quarantine per-rule before the merge, == batch gate, retry-safe") {
+    import graft.operators.PartitionedTable
+    import spark.implicits._
+    val base = Files.createTempDirectory("merge-gate").toString
+    val (table, qdir) = (s"$base/table", s"$base/quarantine")
+    val rules = Seq(
+      "v_positive" -> (col("v") > 0L),
+      "v_small" -> (col("v") < 1000L))
+
+    // batch 0: k=2's LAST change is dirty (v=-5) — quarantined, so the
+    // earlier clean change (v=20) wins the collapse; k=3 fails
+    // v_positive; k=5 fails v_small; k=6's NULL fails BOTH (fail-closed)
+    val b0 = Seq(
+      (1L, "p0", Some(10L), 1L, "upsert"), (2L, "p1", Some(20L), 2L, "upsert"),
+      (2L, "p1", Some(-5L), 3L, "upsert"), (3L, "p0", Some(-2000L), 4L, "upsert"),
+      (5L, "p1", Some(5000L), 5L, "upsert"), (6L, "p0", None, 6L, "upsert")
+    ).toDF("k", "part", "v", "seq", "op")
+    MergeStreams.mergeBatch(spark, table, b0, 0L, "k", "part", "op", Seq("seq"),
+      expectations = rules, quarantineDir = Some(qdir))
+    assert(state(table) === Map(1L -> 10L, 2L -> 20L),
+      "dirty rows must not apply; the earlier clean change wins the collapse")
+
+    // batch 1: delete passes ungated even though v violates the rules
+    val b1 = Seq((1L, "p0", Some(-999L), 7L, "delete"),
+        (4L, "p1", Some(40L), 8L, "upsert"))
+      .toDF("k", "part", "v", "seq", "op")
+    MergeStreams.mergeBatch(spark, table, b1, 1L, "k", "part", "op", Seq("seq"),
+      expectations = rules, quarantineDir = Some(qdir))
+    assert(state(table) === Map(2L -> 20L, 4L -> 40L),
+      "deletes carry no data and must pass the gate")
+
+    // quarantine rides a versioned store at the batch id, tagged per rule
+    def quarantined(id: Long) = spark.read
+      .parquet(VersionedStore.path(qdir, id).toString)
+      .select(col("k"), col("violated")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    assert(quarantined(0L) === Map(
+      2L -> Set("v_positive"), 3L -> Set("v_positive"),
+      5L -> Set("v_small"), 6L -> Set("v_positive", "v_small")))
+    assert(quarantined(1L) === Map.empty)
+
+    // redelivery: no state change, no new quarantine version, same tags
+    MergeStreams.mergeBatch(spark, table, b0, 0L, "k", "part", "op", Seq("seq"),
+      expectations = rules, quarantineDir = Some(qdir))
+    assert(state(table) === Map(2L -> 20L, 4L -> 40L))
+    assert(VersionedStore.versions(spark, qdir).sorted === Seq(0L, 1L))
+    assert(quarantined(0L) === Map(
+      2L -> Set("v_positive"), 3L -> Set("v_positive"),
+      5L -> Set("v_small"), 6L -> Set("v_positive", "v_small")))
+
+    // streamed == batch: the same changelog through split + batch merge
+    val batchTable = s"$base/batch-table"
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("part", "k").orderBy(col("seq").desc)
+    def gateCollapse(df: org.apache.spark.sql.DataFrame) = {
+      val (clean, _) = graft.operators.Expectations.split(
+        df.filter(col("op") === "upsert"), rules)
+      clean.unionByName(df.filter(col("op") =!= "upsert"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn", "seq")
+    }
+    PartitionedTable.commit(spark, batchTable,
+      gateCollapse(b0).filter(col("op") === "upsert").drop("op"), "part")
+    PartitionedTable.merge(spark, batchTable, gateCollapse(b1), "k", "part")
+    assert(state(table) === state(batchTable),
+      "the streamed gate+merge must equal the batch gate+merge")
+
+    // expectations without a quarantine store are refused
+    intercept[IllegalArgumentException] {
+      MergeStreams.mergeBatch(spark, table, b1, 2L, "k", "part", "op",
+        Seq("seq"), expectations = rules)
+    }
   }
 
   test("partitioned CDC out: partition-aware pre-image feeds maintain a view == recompute; retries re-emit identically") {
@@ -323,7 +197,7 @@ class MergeStreamsSpec extends SparkSpec {
       (2L, "p1", 22L, 4L, "upsert"), (3L, "p1", 0L, 5L, "delete"),
       (4L, "p1", 40L, 6L, "upsert")).toDF("k", "part", "v", "seq", "op")
 
-    MergeStreams.mergePartitionedBatch(spark, table, b0, 0L,
+    MergeStreams.mergeBatch(spark, table, b0, 0L,
       "k", "part", "op", Seq("seq"), feedSink = Some(sink _))
     var view = spark.range(0).select(col("id").cast("string").as("part"),
       col("id").as("sum_v"), col("id").as("n"))
@@ -343,7 +217,7 @@ class MergeStreamsSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(viewRows === recompute, "view after batch 0 must equal recompute")
 
-    MergeStreams.mergePartitionedBatch(spark, table, b1, 1L,
+    MergeStreams.mergeBatch(spark, table, b1, 1L,
       "k", "part", "op", Seq("seq"), feedSink = Some(sink _))
     // the feed only scanned the touched partition's dirs
     val first1 = feeds(1L)
@@ -354,7 +228,7 @@ class MergeStreamsSpec extends SparkSpec {
     assert(viewRows === Seq(("p0", 10L, 1L), ("p1", 62L, 2L)))
 
     // redelivery re-emits the byte-identical feed from the same pair
-    MergeStreams.mergePartitionedBatch(spark, table, b1, 1L,
+    MergeStreams.mergeBatch(spark, table, b1, 1L,
       "k", "part", "op", Seq("seq"), feedSink = Some(sink _))
     assert(feeds(1L) === first1, "retry must re-emit the identical feed")
   }
@@ -366,7 +240,7 @@ class MergeStreamsSpec extends SparkSpec {
     val b0 = spark.range(50).select(col("id").as("k"),
       concat(lit("p"), (col("id") % 2).cast("string")).as("part"),
       (col("id") * 10).as("v"), lit(0L).as("seq"), lit("upsert").as("op"))
-    MergeStreams.mergePartitionedBatch(spark, table, b0, 0L,
+    MergeStreams.mergeBatch(spark, table, b0, 0L,
       "k", "part", "op", Seq("seq"))
     val m0 = PartitionedTable.manifest(spark, table, 0L)
     val p1Before = Compaction.layoutStats(spark,
@@ -375,7 +249,7 @@ class MergeStreamsSpec extends SparkSpec {
     // delete-only batch on p1 → DV delta, no rewrite
     val del = Seq((1L, "p1", 0L, 1L, "delete"), (3L, "p1", 0L, 2L, "delete"))
       .toDF("k", "part", "v", "seq", "op")
-    MergeStreams.mergePartitionedBatch(spark, table, del, 1L,
+    MergeStreams.mergeBatch(spark, table, del, 1L,
       "k", "part", "op", Seq("seq"))
     val m1 = PartitionedTable.manifest(spark, table, 1L)
     val hfs = VersionedStore.fs(spark, table)
@@ -389,7 +263,7 @@ class MergeStreamsSpec extends SparkSpec {
       === p1Before, "vacuum must keep the DV's base")
 
     // redelivery: no new manifest, same state
-    MergeStreams.mergePartitionedBatch(spark, table, del, 1L,
+    MergeStreams.mergeBatch(spark, table, del, 1L,
       "k", "part", "op", Seq("seq"))
     assert(PartitionedTable.versions(spark, table).sorted === Seq(0L, 1L))
     assert(PartitionedTable.read(spark, table).count() === 48)
@@ -406,9 +280,9 @@ class MergeStreamsSpec extends SparkSpec {
       .repartition(8)
     val target = 32L * 1024 * 1024
 
-    MergeStreams.mergePartitionedBatch(spark, table, batchDf(0), 0L,
+    MergeStreams.mergeBatch(spark, table, batchDf(0), 0L,
       "k", "part", "op", Seq("seq"), compactTargetBytes = Some(target))
-    MergeStreams.mergePartitionedBatch(spark, table, batchDf(1), 1L,
+    MergeStreams.mergeBatch(spark, table, batchDf(1), 1L,
       "k", "part", "op", Seq("seq"), compactTargetBytes = Some(target))
     // the fold kept the pinned version dir small WITHOUT minting a
     // manifest — batch ids stay the manifest ids
@@ -418,43 +292,27 @@ class MergeStreamsSpec extends SparkSpec {
     val (files, _) = graft.operators.Compaction.layoutStats(spark,
       VersionedStore.path(s"$table/__part=p0", m("__part=p0")).toString)
     assert(files <= 2, s"fold must shrink the shred, got $files")
+    val folded = state(table)
+    assert(folded.size === 128 && folded(70L) === 7L)
+
+    // redelivery after an in-place fold: same id, same content, no new
+    // manifest
+    MergeStreams.mergeBatch(spark, table, batchDf(1), 1L,
+      "k", "part", "op", Seq("seq"), compactTargetBytes = Some(target))
+    assert(state(table) === folded)
+    assert(PartitionedTable.versions(spark, table).sorted === Seq(0L, 1L))
 
     // batch 2 still applies (nothing swallowed its id)
-    MergeStreams.mergePartitionedBatch(spark, table, batchDf(2), 2L,
+    MergeStreams.mergeBatch(spark, table, batchDf(2), 2L,
       "k", "part", "op", Seq("seq"), compactTargetBytes = Some(target))
-    val state = PartitionedTable.read(spark, table)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(state.size === 192 && state(130L) === 4L)
+    val after = state(table)
+    assert(after.size === 192 && after(130L) === 4L)
 
     // equality with the unfolded run of the same changelog
     val plain = Files.createTempDirectory("pmerge-plain").toString + "/table"
-    (0L to 2L).foreach(b => MergeStreams.mergePartitionedBatch(
+    (0L to 2L).foreach(b => MergeStreams.mergeBatch(
       spark, plain, batchDf(b), b, "k", "part", "op", Seq("seq")))
-    val plainState = PartitionedTable.read(spark, plain)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap
-    assert(state === plainState, "the fold is layout-only")
-  }
-
-  test("a redelivered changelog batch applies exactly once") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("merge-retry").toString + "/store"
-    val b0 = Seq((1L, 10L, 1L, "upsert"), (2L, 20L, 2L, "upsert"))
-      .toDF("k", "v", "seq", "op")
-    val b1 = Seq((1L, 0L, 3L, "delete"), (3L, 30L, 4L, "upsert"))
-      .toDF("k", "v", "seq", "op")
-
-    MergeStreams.mergeBatch(spark, store, b0, 0L, "k", "op", Seq("seq"))
-    MergeStreams.mergeBatch(spark, store, b1, 1L, "k", "op", Seq("seq"))
-    val after = state(store)
-    assert(after === Map(2L -> 20L, 3L -> 30L))
-    val versionsAfter = VersionedStore.versions(spark, store).sorted
-
-    // at-least-once: batch 1 arrives again — no new version, no
-    // double-apply, the deleted key stays deleted
-    MergeStreams.mergeBatch(spark, store, b1, 1L, "k", "op", Seq("seq"))
-    assert(state(store) === after)
-    assert(VersionedStore.versions(spark, store).sorted === versionsAfter,
-      "a retry must not mint a new version")
+    assert(after === state(plain), "the fold is layout-only")
   }
 
   test("a NULL op fails loudly even under the expectations gate (null-safe split)") {
@@ -462,26 +320,17 @@ class MergeStreamsSpec extends SparkSpec {
     val base = Files.createTempDirectory("merge-nullop").toString
     val rules = Seq("v_positive" -> (col("v") > 0L))
 
-    // flat fold: the null-op row must reach checkedOp's raise_error,
-    // not vanish between the two gate predicates
-    val bad = Seq((1L, 10L, 1L, Option("upsert")), (2L, 20L, 2L, Option.empty[String]))
-      .toDF("k", "v", "seq", "op")
-    intercept[Exception] {
-      MergeStreams.mergeBatch(spark, s"$base/flat", bad, 0L, "k", "op",
-        Seq("seq"), expectations = rules, quarantineDir = Some(s"$base/fq"))
-    }
-    assert(VersionedStore.versions(spark, s"$base/flat").isEmpty,
-      "a failed batch must not commit")
-
-    // partitioned fold: same contract through the op census
-    val pbad = Seq((1L, "p0", 10L, 1L, Option("upsert")),
+    // the null-op row must reach the merge's op census, not vanish
+    // between the two gate predicates
+    val bad = Seq((1L, "p0", 10L, 1L, Option("upsert")),
         (2L, "p1", 20L, 2L, Option.empty[String]))
       .toDF("k", "part", "v", "seq", "op")
     intercept[Exception] {
-      MergeStreams.mergePartitionedBatch(spark, s"$base/ptable", pbad, 0L,
-        "k", "part", "op", Seq("seq"), rules, Some(s"$base/pq"))
+      MergeStreams.mergeBatch(spark, s"$base/table", bad, 0L,
+        "k", "part", "op", Seq("seq"), rules, Some(s"$base/quarantine"))
     }
-    assert(graft.operators.PartitionedTable.versions(spark, s"$base/ptable").isEmpty)
+    assert(graft.operators.PartitionedTable.versions(spark, s"$base/table").isEmpty,
+      "a failed batch must not commit")
   }
 
   test("empty micro-batches keep the partitioned fold and its CDC feed alive") {
@@ -497,7 +346,7 @@ class MergeStreamsSpec extends SparkSpec {
       feeds(id) = df.collect().toSeq)
 
     // EMPTY FIRST batch: commits an empty manifest, feed is empty, no crash
-    MergeStreams.mergePartitionedBatch(spark, table, empty, 0L,
+    MergeStreams.mergeBatch(spark, table, empty, 0L,
       "k", "part", "op", Seq("seq"), feedSink = sink)
     assert(PartitionedTable.versions(spark, table) === Seq(0L))
     assert(feeds(0L).isEmpty)
@@ -505,7 +354,7 @@ class MergeStreamsSpec extends SparkSpec {
     // real batch after the empty one applies normally; feed = inserts
     val b1 = Seq((1L, "p0", 10L, 1L, "upsert"), (2L, "p1", 20L, 2L, "upsert"))
       .toDF("k", "part", "v", "seq", "op")
-    MergeStreams.mergePartitionedBatch(spark, table, b1, 1L,
+    MergeStreams.mergeBatch(spark, table, b1, 1L,
       "k", "part", "op", Seq("seq"), feedSink = sink)
     assert(feeds(1L).map(r => (r.getString(0), r.getLong(1), r.getString(2)))
       .toSet === Set(("p0", 1L, "insert"), ("p1", 2L, "insert")))
@@ -515,7 +364,7 @@ class MergeStreamsSpec extends SparkSpec {
     // schema — the stream must not crash on the empty partition mapping
     val dirty = Seq((3L, "p0", -5L, 3L, "upsert"))
       .toDF("k", "part", "v", "seq", "op")
-    MergeStreams.mergePartitionedBatch(spark, table, dirty, 2L,
+    MergeStreams.mergeBatch(spark, table, dirty, 2L,
       "k", "part", "op", Seq("seq"),
       expectations = Seq("v_positive" -> (col("v") > 0L)),
       quarantineDir = Some(s"$base/quar"), feedSink = sink)
@@ -527,27 +376,12 @@ class MergeStreamsSpec extends SparkSpec {
     // and the fold continues past it
     val b3 = Seq((3L, "p0", 30L, 4L, "upsert"))
       .toDF("k", "part", "v", "seq", "op")
-    MergeStreams.mergePartitionedBatch(spark, table, b3, 3L,
+    MergeStreams.mergeBatch(spark, table, b3, 3L,
       "k", "part", "op", Seq("seq"), feedSink = sink)
     assert(feeds(3L).map(r => (r.getString(0), r.getLong(1), r.getString(2)))
       .toSet === Set(("p0", 3L, "insert")))
     assert(PartitionedTable.read(spark, table).count() === 3)
 
-    // FLAT fold: empty first batch + real follow-up, same contract
-    val (fstore, ffeeds) = (s"$base/flat",
-      collection.mutable.Map[Long, Seq[org.apache.spark.sql.Row]]())
-    val fsink = Some((df: org.apache.spark.sql.DataFrame, id: Long) =>
-      ffeeds(id) = df.collect().toSeq)
-    val fempty = Seq((0L, 0L, 0L, "upsert")).toDF("k", "v", "seq", "op").limit(0)
-    MergeStreams.mergeBatch(spark, fstore, fempty, 0L, "k", "op", Seq("seq"),
-      feedSink = fsink)
-    assert(ffeeds(0L).isEmpty)
-    val fb1 = Seq((1L, 10L, 1L, "upsert")).toDF("k", "v", "seq", "op")
-    MergeStreams.mergeBatch(spark, fstore, fb1, 1L, "k", "op", Seq("seq"),
-      feedSink = fsink)
-    assert(ffeeds(1L).map(r => (r.getLong(0), r.getString(1))).toSet ===
-      Set((1L, "insert")))
-    assert(state(fstore) === Map(1L -> 10L))
   }
 
   test("streaming folds keep stats sidecars: mergeAt writes them, the in-place fold regenerates them") {
