@@ -3,7 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import graft.streaming.VersionedStore
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructField, StructType}
@@ -322,13 +322,8 @@ object PartitionedTable {
     try out.write((meta.toSeq ++ lines).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (hfs.rename(tmp, target)) {
-      // every manifest mutation invalidates this JVM's cached merged
-      // schemas for the dir — a later write may re-mint a previously
-      // vacuumed batch=N path with a DIFFERENT schema
-      bumpSchemaEpoch(dir)
-      true
-    } else {
+    if (hfs.rename(tmp, target)) true
+    else {
       hfs.delete(tmp, true)
       if (versions(spark, dir).contains(v)) false
       else throw new java.io.IOException(
@@ -419,9 +414,10 @@ object PartitionedTable {
     // the landed files' schema is KNOWN (df's columns + the PartDir
     // partition dir): pass it to the sidecar re-reads below so neither
     // pays a footer-inference pass (~77 ms driver wall per resolution)
+    val dataSchema = allNullable(df.schema).asInstanceOf[StructType]
     val landedSchema = StructType(
-      allNullable(df.schema).asInstanceOf[StructType].fields.toSeq :+
-        StructField(PartDir, StringType))
+      dataSchema.fields.toSeq :+ StructField(PartDir, StringType))
+    var statsSchema: Option[StructType] = None
     if (statsCols.nonEmpty) {
       // one job over the landed files: per-(partition, file) min/max,
       // written partitionBy so each partition's slice renames into its
@@ -434,12 +430,13 @@ object PartitionedTable {
       val aggs = statsCols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
       val statsTmp = new Path(dir, s".tmp-stats-${java.util.UUID.randomUUID}")
-      spark.read.schema(landedSchema).option("basePath", tmp.toString)
+      val stats = spark.read.schema(landedSchema).option("basePath", tmp.toString)
         .parquet(tmp.toString)
         .groupBy(col(partCol).as("part"),
           regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"))
         .agg(aggs.head, aggs.tail: _*)
-        .withColumn(PartDir, col("part"))
+      statsSchema = Some(stats.schema)
+      stats.withColumn(PartDir, col("part"))
         .write.partitionBy(PartDir).parquet(statsTmp.toString)
       hfs.listStatus(statsTmp).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartDir="))
@@ -486,7 +483,15 @@ object PartitionedTable {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$PartDir="))
     val committed = landed.map { s =>
       val name = s.getPath.getName
-      name -> landStoreVersion(spark, new Path(dir, name).toString, s.getPath)
+      val landedStats = statsSchema.filter(_ =>
+        hfs.exists(new Path(s.getPath, StatsDir))).map(StatsDir -> _)
+      val storeDir = new Path(dir, name).toString
+      val sv = landStoreVersion(spark, storeDir, s.getPath)
+      // write-through: the landed files carry exactly these schemas, so
+      // no read of this slice infers them
+      updateSliceMeta(VersionedStore.path(storeDir, sv).toString)(_ =>
+        SliceMeta(schemas = Map("" -> dataSchema) ++ landedStats))
+      name -> sv
     }.toMap
     hfs.delete(tmp, true)
     committed
@@ -525,7 +530,12 @@ object PartitionedTable {
       val dest = VersionedStore.path(storeDir, next)
       if (!hfs.exists(dest) && hfs.rename(src, dest)) {
         val nested = new Path(dest, src.getName)
-        if (!hfs.exists(nested)) return next
+        if (!hfs.exists(nested)) {
+          // a (re-)minted path: whatever this JVM cached under it
+          // described an earlier, deleted incarnation
+          updateSliceMeta(dest.toString)(_ => SliceMeta())
+          return next
+        }
         src = nested // HDFS nesting: pull our dir back out and retry
       }
     }
@@ -969,55 +979,96 @@ object PartitionedTable {
     }
   }
 
-  /** All multi-partition reads merge footer schemas: after a
-    * schema-evolving merge, untouched partitions' files lack the new
-    * columns — the superset schema null-fills them, and inference must
-    * never depend on which file gets sampled first. Footer merging is
-    * a metadata cost on the selected dirs only — paid ONCE per
-    * distinct path set per JVM: slice version dirs are immutable after
-    * commit (the manifest pattern; in-place compaction swaps layout,
-    * never schema), so the merged schema caches forever and
-    * re-PLANNING a 10^5-slice table costs a map lookup instead of 10^5
-    * footer reads per SQL statement. Reading with the explicit merged
-    * schema goes through the exact per-file reconciliation
-    * mergeSchema-inferred reads use (missing columns null-fill), so
-    * results are bit-identical; the cache clears wholesale past a size
-    * bound (long test JVMs mint thousands of tiny tables). */
-  /** Merged-footer-schema cache: `spark.read.schema(merged)` equals
-    * `mergeSchema=true` bit-for-bit (same per-file reconciliation) but
-    * skips the footer-merge JOB — huge for many-slice re-planning.
+  /** PER-SLICE METADATA CACHE — the one place plan-time metadata lives.
+    * A slice is an immutable store-version dir (`…/__part=x/batch=N`);
+    * its entry holds what planning needs from it:
+    *   - the footer schema of its data files and of each sidecar dir
+    *     read as data (`_stats`, `_append`, …) — a read of several
+    *     slices merges these in sorted path order, exactly the fold
+    *     `mergeSchema=true` inference runs over the files;
+    *   - its live row count and on-disk bytes ([[estimateRows]],
+    *     [[estimateBytes]]);
+    *   - its `_stats` rows, so [[readWhereAll]] prunes files on the
+    *     driver without a job.
+    * [[landPartitions]] writes each landed slice's schema through, so a
+    * read of slices this JVM landed infers nothing; only slices it has
+    * never seen pay one footer-merge job ([[footerSchemasOf]]), and
+    * their entries fill in.
     *
-    * KEYING (round 17): a 16-byte digest of the sorted path list PLUS
-    * each involved table dir's INVALIDATION EPOCH — version-dir paths
-    * (`batch=N`) are reusable (restore→vacuum drops max ids and a later
-    * write re-mints the same `batch=N`; tests delete+recreate dirs in
-    * one JVM), and a re-minted dir with a different schema must never
-    * serve the stale cached one. Every manifest commit and every vacuum
-    * bumps its dir's epoch ([[bumpSchemaEpoch]]), so this JVM's
-    * write/restore/vacuum paths structurally can't hit a pre-mutation
-    * entry. BOUNDING: LRU by approximate BYTES (keys are fixed-size
-    * digests, values one schema each) instead of the old
-    * 8192-entries-then-`clear()` — a wholesale clear dumped every
-    * table's schema at once, and full path-list keys were MBs at 10^5
-    * slices. */
-  private val mergedSchemaCache =
-    new java.util.LinkedHashMap[String, (StructType, Long)](
-      256, 0.75f, /*accessOrder=*/ true)
-  private var mergedSchemaCacheBytes = 0L
-  private[operators] var mergedSchemaCacheMaxBytes: Long = 32L << 20
-  private[operators] var mergedSchemaCacheMisses = 0L
-  private[operators] def mergedSchemaCacheEntries: Int =
-    mergedSchemaCache.synchronized(mergedSchemaCache.size)
+    * KEYING: (version dir, the table dir's epoch). A `batch=N` path is
+    * reusable — restore→vacuum drops the max ids and a later write
+    * re-mints the same path, and tests delete and recreate dirs — so
+    * [[landStoreVersion]] resets the entry of every path it mints, and
+    * the epoch ([[bumpSliceEpoch]]) invalidates a whole table when
+    * files change under paths that stay live: vacuum (deletes dirs a
+    * later write can re-mint) and in-place compaction (rewrites a
+    * version dir's files and `_stats`). A manifest commit changes no
+    * slice's content, so untouched slices stay cached across merges.
+    * BOUNDING: LRU by approximate bytes. */
+  private final case class SliceMeta(
+      schemas: Map[String, StructType] = Map.empty,
+      rows: Option[Long] = None,
+      bytes: Option[Long] = None,
+      stats: Option[Seq[Row]] = None) {
+    def weight(key: String): Long =
+      96L + key.length * 2L +
+        schemas.map { case (s, t) => (s.length + t.catalogString.length) * 2L }.sum +
+        stats.map(_.map(rowWeight).sum).getOrElse(0L)
+  }
 
-  /** Per-table-dir invalidation epoch for the merged-schema cache. */
-  private val schemaCacheEpochs =
+  /** Approximate heap bytes of one cached `_stats` row. */
+  private def rowWeight(r: Row): Long =
+    48L + r.toSeq.map {
+      case s: String => 40L + 2L * s.length
+      case _ => 16L
+    }.sum
+
+  private val sliceMeta =
+    new java.util.LinkedHashMap[(String, Long), (SliceMeta, Long)](
+      256, 0.75f, /*accessOrder=*/ true)
+  private var sliceMetaBytes = 0L
+  private[operators] var sliceMetaMaxBytes: Long = 32L << 20
+  /** Footer-merge jobs run for slices the cache did not know. */
+  private[operators] var sliceMetaMisses = 0L
+  private[operators] def sliceMetaEntries: Int =
+    sliceMeta.synchronized(sliceMeta.size)
+  private[operators] def clearSliceMeta(): Unit = sliceMeta.synchronized {
+    sliceMeta.clear()
+    sliceMetaBytes = 0L
+  }
+
+  /** Per-table-dir invalidation epoch of the slice cache. */
+  private val sliceEpochs =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[operators] def bumpSchemaEpoch(dir: String): Unit =
-    schemaCacheEpochs.merge(
-      dir, java.lang.Long.valueOf(1L),
+  private[operators] def bumpSliceEpoch(dir: String): Unit =
+    sliceEpochs.merge(
+      new Path(dir).toString, java.lang.Long.valueOf(1L),
       (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue)): Unit
-  private def schemaEpochOf(dir: String): Long =
-    Option(schemaCacheEpochs.get(dir)).map(_.longValue).getOrElse(0L)
+  private def sliceKey(vdir: String): (String, Long) =
+    (vdir, Option(sliceEpochs.get(tableDirOf(vdir))).map(_.longValue)
+      .getOrElse(0L))
+
+  private def sliceMetaOf(vdir: String): Option[SliceMeta] =
+    sliceMeta.synchronized(Option(sliceMeta.get(sliceKey(vdir))).map(_._1))
+
+  /** Replace `vdir`'s entry with `f` of it (empty when absent), then
+    * evict least-recently-used entries past the byte bound. */
+  private def updateSliceMeta(vdir: String)(f: SliceMeta => SliceMeta): Unit = {
+    val key = sliceKey(vdir)
+    sliceMeta.synchronized {
+      val old = Option(sliceMeta.remove(key))
+      old.foreach(o => sliceMetaBytes -= o._2)
+      val m = f(old.map(_._1).getOrElse(SliceMeta()))
+      val w = m.weight(vdir)
+      sliceMeta.put(key, (m, w))
+      sliceMetaBytes += w
+      val it = sliceMeta.entrySet().iterator()
+      while (sliceMetaBytes > sliceMetaMaxBytes && it.hasNext) {
+        sliceMetaBytes -= it.next().getValue._2
+        it.remove()
+      }
+    }
+  }
 
   /** The table dir a slice path belongs to, for epoch lookup: the
     * prefix before the partition (`/__part=`) or version (`/batch=`)
@@ -1034,6 +1085,77 @@ object PartitionedTable {
         if (slash > 0) p.substring(0, slash) else p
       }
     }
+  }
+
+  /** The (version dir, sub dir) a read path's files belong to: "" for
+    * the version's own data files (the dir itself, or a file in it),
+    * the sidecar dir name for a `_`-prefixed dir inside it. None = not
+    * a store path; such reads infer their schema the plain way. */
+  private def sliceSlotOf(p: String): Option[(String, String)] = {
+    val path = new Path(p)
+    def isVersion(q: Path) = q != null && q.getName.startsWith("batch=")
+    if (isVersion(path)) Some((path.toString, ""))
+    else if (path.getName.startsWith("_") && isVersion(path.getParent))
+      Some((path.getParent.toString, path.getName))
+    else if (isVersion(path.getParent)) Some((path.getParent.toString, ""))
+    else None
+  }
+
+  /** The files a slot's schema is inferred from, as Spark's file index
+    * lists them (hidden `_`/`.` names skipped). None = a layout this
+    * cache does not model (no files, or a nested data dir). */
+  private def slotFiles(spark: SparkSession, slot: (String, String)): Option[Seq[String]] = {
+    val d = if (slot._2.isEmpty) new Path(slot._1) else new Path(slot._1, slot._2)
+    val listed = VersionedStore.fs(spark, d.toString).listStatus(d).toSeq
+      .filterNot { s =>
+        val n = s.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }
+    if (listed.isEmpty || listed.exists(_.isDirectory)) None
+    else Some(listed.map(_.getPath.toString).sorted)
+  }
+
+  /** Footer schemas of `slots` the cache lacks, read in ONE job and
+    * recorded. None = some slot's layout is not modeled. */
+  private def footerSchemasOf(
+      spark: SparkSession, slots: Seq[(String, String)]
+  ): Option[Map[(String, String), StructType]] = {
+    val files = slots.map(s => s -> slotFiles(spark, s))
+    if (files.exists(_._2.isEmpty)) return None
+    val all = files.flatMap { case (s, fs) => fs.get.map(s -> _) }
+    val schemas = org.apache.spark.sql.graft.Bridge
+      .footerSchemas(spark, all.map(_._2))
+    sliceMeta.synchronized(sliceMetaMisses += 1)
+    val merged = all.map(_._1).zip(schemas).groupBy(_._1).map { case (s, ss) =>
+      s -> ss.map(_._2).reduceLeft(
+        org.apache.spark.sql.graft.Bridge.mergeSchemas(spark, _, _))
+    }
+    merged.foreach { case ((vdir, sub), t) =>
+      updateSliceMeta(vdir)(m => m.copy(schemas = m.schemas + (sub -> t))) }
+    Some(merged)
+  }
+
+  /** What `mergeSchema=true` inference returns for `paths`, from the
+    * slice cache plus one footer-merge job over the slots it lacks:
+    * slot schemas fold in sorted path order (the order Spark folds
+    * the files in), and the result is all-nullable like every
+    * file-source relation's. None = some path is not a modeled store
+    * slot. */
+  private[operators] def mergedSchemaOf(
+      spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val slots0 = paths.map(sliceSlotOf)
+    if (slots0.exists(_.isEmpty)) return None
+    val slots = slots0.flatten.distinct.sortBy { case (v, s) =>
+      (if (s.isEmpty) v else s"$v/$s") + "/" }
+    val known = slots.map(s => s -> sliceMetaOf(s._1).flatMap(_.schemas.get(s._2)))
+    val missing = known.collect { case (s, None) => s }
+    val inferred =
+      if (missing.isEmpty) Map.empty[(String, String), StructType]
+      else footerSchemasOf(spark, missing).getOrElse(return None)
+    val schemas = known.map { case (s, t) => t.getOrElse(inferred(s)) }
+    Some(org.apache.spark.sql.graft.Bridge.asNullable(schemas.reduceLeft(
+      org.apache.spark.sql.graft.Bridge.mergeSchemas(spark, _, _))))
   }
 
   /** FIXED sidecar schemas (the [[landMorDeltas]] / [[landPartitions]] /
@@ -1068,36 +1190,71 @@ object PartitionedTable {
     case other => other
   }
 
-  private def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val md = java.security.MessageDigest.getInstance("MD5")
-    paths.sorted.foreach { p => md.update(p.getBytes(utf8)); md.update(0: Byte) }
-    paths.map(tableDirOf).distinct.sorted.foreach { d =>
-      md.update(s"|$d=${schemaEpochOf(d)}".getBytes(utf8))
+  /** Heap-bytes estimate of a row of `s` before it is fetched. */
+  private def rowWeightOf(s: StructType): Long =
+    48L + s.fields.map(f => if (f.dataType == StringType) 80L else 16L).sum
+
+  /** The `_stats` rows of version dirs `vdirs` as ONE frame under their
+    * merged sidecar schema (what a `mergeSchema=true` read of the
+    * sidecars returns). Rows come from the slice cache, and the rows of
+    * slices it lacks from one read that then fills it; together they
+    * form a driver-local relation, so a filter over it folds at
+    * optimization and its collect runs no job. Rows that would take
+    * more than half the cache's byte budget stay a distributed scan of
+    * the sidecars instead — the only fallback, chosen by size. */
+  private def statsOf(spark: SparkSession, vdirs: Seq[Path]): DataFrame = {
+    val keys = vdirs.map(_.toString).distinct.sorted
+    val paths = keys.map(k => new Path(k, StatsDir).toString)
+    lazy val distributed = readParquet(spark, paths)
+    val merged = mergedSchemaOf(spark, paths).getOrElse(return distributed)
+    val own = keys.flatMap(k => sliceMetaOf(k).flatMap(_.schemas.get(StatsDir))
+      .map(k -> _)).toMap
+    // a slot whose own schema is gone (evicted) or disagrees with the
+    // merged field types cannot be laid out locally
+    if (own.size < keys.size || own.values.exists(_.fields.exists(f =>
+      !merged.fields.exists(m => m.name == f.name && m.dataType == f.dataType))))
+      return distributed
+    val held = keys.flatMap(k => sliceMetaOf(k).flatMap(_.stats).map(k -> _)).toMap
+    val missing = keys.filterNot(held.contains)
+    val files = missing.map(k => k -> slotFiles(spark, (k, StatsDir))).toMap
+    if (files.values.exists(_.isEmpty)) return distributed
+    val weight = held.values.map(_.map(rowWeight).sum).sum +
+      missing.map(k => rowWeightOf(own(k)) *
+        VersionedStore.footerRowCount(spark, new Path(k, StatsDir))).sum
+    if (weight > sliceMetaMaxBytes / 2) return distributed
+    val fetched: Map[String, Seq[Row]] =
+      if (missing.isEmpty) Map.empty
+      else {
+        val slot = "__graft_slot"
+        val rows = missing.zipWithIndex.map { case (k, i) =>
+          spark.read.schema(own(k)).parquet(files(k).get: _*)
+            .withColumn(slot, lit(i))
+        }.reduce(_.unionByName(_, allowMissingColumns = true)).collect()
+        val bySlot = rows.groupBy(r => r.getInt(r.fieldIndex(slot)))
+        missing.zipWithIndex.map { case (k, i) =>
+          val names = own(k).fieldNames
+          k -> bySlot.getOrElse(i, Array.empty[Row]).toSeq
+            .map(r => Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
+        }.toMap
+      }
+    fetched.foreach { case (k, rs) => updateSliceMeta(k)(_.copy(stats = Some(rs))) }
+    val local = keys.flatMap { k =>
+      val at = own(k).fieldNames.zipWithIndex.toMap
+      held.getOrElse(k, fetched(k)).map(r =>
+        Row.fromSeq(merged.fieldNames.map(n => at.get(n).map(r.get).orNull)))
     }
-    val key = java.util.Base64.getEncoder.encodeToString(md.digest())
-    val cached = mergedSchemaCache.synchronized(
-      Option(mergedSchemaCache.get(key)))
-    cached match {
-      case Some((schema, _)) => spark.read.schema(schema).parquet(paths: _*)
-      case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        val schema = df.schema
-        val bytes = 64L + key.length * 2L + schema.catalogString.length * 2L
-        mergedSchemaCache.synchronized {
-          mergedSchemaCacheMisses += 1
-          if (mergedSchemaCache.put(key, (schema, bytes)) == null)
-            mergedSchemaCacheBytes += bytes
-          val it = mergedSchemaCache.entrySet().iterator()
-          while (mergedSchemaCacheBytes > mergedSchemaCacheMaxBytes &&
-            it.hasNext) {
-            mergedSchemaCacheBytes -= it.next().getValue._2
-            it.remove()
-          }
-        }
-        df
-    }
+    spark.createDataFrame(java.util.Arrays.asList(local: _*), merged)
   }
+
+  /** Parquet read of store paths under their merged footer schema
+    * ([[mergedSchemaOf]]) — bit-identical to `mergeSchema=true`
+    * (same per-file reconciliation: missing columns null-fill) without
+    * its inference job. */
+  private def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    mergedSchemaOf(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
 
   /** Deletion-vector delta versions: a delete-only merge lands a tiny
     * version dir holding ONLY `_dv/` — (part, file, row_index) rows to
@@ -1872,7 +2029,7 @@ object PartitionedTable {
       val statsPath = new Path(baseDir, StatsDir)
       val basePaths =
         if (!hfs.exists(statsPath)) None
-        else keepFilter(readParquet(spark, Seq(statsPath.toString)))
+        else keepFilter(statsOf(spark, Seq(baseDir)))
           .map(_.select("file").collect() // file-count-sized
             .map(r => new Path(baseDir, r.getString(0)).toString).toSeq)
       // Some(Nil) = every base file pruned; the partition still reads —
@@ -1888,9 +2045,7 @@ object PartitionedTable {
     val keptStatFiles: Seq[String] =
       if (withStats.isEmpty) Nil
       else {
-        val stats = readParquet(spark, withStats.map(kv =>
-          new Path(versionDir(kv), StatsDir).toString))
-        keepFilter(stats) match {
+        keepFilter(statsOf(spark, withStats.map(versionDir))) match {
           case None => // stats on other columns only
             withStats.map(kv => versionDir(kv).toString)
           case Some(kept) =>
@@ -2212,6 +2367,8 @@ object PartitionedTable {
             if (bCols.nonEmpty) writeVersionBloom(spark, tmp, bCols, bBits, partValue)
           }
         Compaction.compact(spark, vdir, targetBytes, cluster, stage)
+        // new files (and `_stats` naming them) under a live path
+        bumpSliceEpoch(dir)
         Some(name)
       } else None
     }
@@ -2486,8 +2643,8 @@ object PartitionedTable {
       }
     }
     // vacuum deletes version dirs whose batch=N paths a later write can
-    // re-mint — drop this JVM's cached merged schemas for the dir
-    bumpSchemaEpoch(dir)
+    // re-mint — drop this JVM's cached slice metadata for the dir
+    bumpSliceEpoch(dir)
     (dropped, prunedStores)
   }
 
@@ -4419,18 +4576,6 @@ object PartitionedTable {
       fsOf(effDir).exists(new Path(effDir, BloomDir)))
   }
 
-  /** Per-slice on-disk byte sums, cached process-wide: a committed
-    * store-version dir is immutable, so an entry never goes stale —
-    * vacuumed slices simply stop being looked up. Bounded so a
-    * long-lived session's footprint stays fixed. */
-  private val sliceBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Per-slice live ROW counts (footer math, DV/append-aware), cached
-    * process-wide under the same immutability argument. */
-  private val sliceRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** Plan-time ROW-COUNT estimate for table version `asOf` (None =
     * latest), optionally restricted to partition VALUES: the sum of
     * every live slice's footer row counts — EXACT for full slices, and
@@ -4442,7 +4587,7 @@ object PartitionedTable {
     * still unlocks auto-broadcast. Returns None past `maxSlices` live
     * slices (same argument as [[estimateBytes]]); cost is one listing
     * + footer reads per UNCACHED slice, amortized to zero by the
-    * process-wide cache because slices are immutable. */
+    * slice cache ([[SliceMeta]]). */
   def estimateRows(
       spark: SparkSession, dir: String, asOf: Option[Long] = None,
       partitions: Option[Seq[String]] = None,
@@ -4463,21 +4608,21 @@ object PartitionedTable {
     def sliceRows(storeDir: String, sv: Long): Long = {
       val pinned = VersionedStore.path(storeDir, sv)
       val key = pinned.toString
-      val cached = sliceRowsCache.get(key)
-      if (cached != null) return cached
-      val rows = dvBaseOf(spark, storeDir, sv) match {
-        case None => VersionedStore.footerRowCount(spark, pinned)
-        case Some(b) => // live rows of a MoR delta: base − DV + appends
-          val hfs = VersionedStore.fs(spark, storeDir)
-          val app = new Path(pinned, AppendDir)
-          VersionedStore.footerRowCount(spark,
-            VersionedStore.path(storeDir, b)) -
-            VersionedStore.footerRowCount(spark, new Path(pinned, DvDir)) +
-            (if (hfs.exists(app)) VersionedStore.footerRowCount(spark, app)
-             else 0L)
+      sliceMetaOf(key).flatMap(_.rows).getOrElse {
+        val rows = dvBaseOf(spark, storeDir, sv) match {
+          case None => VersionedStore.footerRowCount(spark, pinned)
+          case Some(b) => // live rows of a MoR delta: base − DV + appends
+            val hfs = VersionedStore.fs(spark, storeDir)
+            val app = new Path(pinned, AppendDir)
+            VersionedStore.footerRowCount(spark,
+              VersionedStore.path(storeDir, b)) -
+              VersionedStore.footerRowCount(spark, new Path(pinned, DvDir)) +
+              (if (hfs.exists(app)) VersionedStore.footerRowCount(spark, app)
+               else 0L)
+        }
+        updateSliceMeta(key)(_.copy(rows = Some(rows)))
+        rows
       }
-      if (sliceRowsCache.size < 65536) sliceRowsCache.put(key, rows)
-      rows
     }
     Some(m.toSeq.map { case (name, sv) =>
       sliceRows(storeDirOf(spark, dir, cloneSrc, name, sv), sv)
@@ -4493,8 +4638,8 @@ object PartitionedTable {
     * `maxSlices` live slices: a table that wide is no broadcast
     * candidate, and the caller should fall back to Spark's default
     * rather than pay a wide driver-side listing at plan time. Cost is
-    * one `getContentSummary` per UNCACHED slice; slices are immutable,
-    * so a table's steady-state estimate is manifest-read-only (which
+    * one `getContentSummary` per UNCACHED slice ([[SliceMeta]]), so a
+    * table's steady-state estimate is manifest-read-only (which
     * is also why the cap can sit at thousands of slices: the wide
     * listing is paid once per process, not once per plan). */
   def estimateBytes(
@@ -4522,15 +4667,15 @@ object PartitionedTable {
     def sliceBytes(storeDir: String, sv: Long, depth: Int): Long = {
       val p = VersionedStore.path(storeDir, sv)
       val key = p.toString
-      val cached = sliceBytesCache.get(key)
-      if (cached != null) return cached
-      val own = p.getFileSystem(hadoopConf).getContentSummary(p).getLength
-      val total = // DV delta: the base chain is read too, so count it
-        if (depth >= 8) own
-        else own + dvBaseOf(spark, storeDir, sv)
-          .map(b => sliceBytes(storeDir, b, depth + 1)).getOrElse(0L)
-      if (sliceBytesCache.size < 65536) sliceBytesCache.put(key, total)
-      total
+      sliceMetaOf(key).flatMap(_.bytes).getOrElse {
+        val own = p.getFileSystem(hadoopConf).getContentSummary(p).getLength
+        val total = // DV delta: the base chain is read too, so count it
+          if (depth >= 8) own
+          else own + dvBaseOf(spark, storeDir, sv)
+            .map(b => sliceBytes(storeDir, b, depth + 1)).getOrElse(0L)
+        updateSliceMeta(key)(_.copy(bytes = Some(total)))
+        total
+      }
     }
     Some(m.toSeq.map { case (name, sv) =>
       sliceBytes(storeDirOf(spark, dir, cloneSrc, name, sv), sv, 0)

@@ -1148,10 +1148,17 @@ object TextAnalysis {
         // (both sides already hash(shingle)) all run shuffle-free on
         // top of it. fanOut: the tokenize+shingle projection is the hot
         // loop and ran single-threaded over the one-split fixture scan.
+        // sp has one row per document: broadcast it only while the
+        // documents' own size estimate fits the broadcast threshold
+        // (-1, broadcasting off, fits nothing)
+        val spSide =
+          if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
+            s.sessionState.conf.autoBroadcastJoinThreshold) broadcast(sp)
+          else sp
         val ex = Tables.fanOut(docs)
           .select(col("doc_id"),
             explode(Exprs.wordShingles(Exprs.tokens(col("text")), 5)).as("shingle"))
-          .join(broadcast(sp), "doc_id")
+          .join(spSide, "doc_id")
           .repartition(col("shingle"))
           .localCheckpoint(true)
         // per-shingle census: df (row count — shingles are per-doc

@@ -2125,8 +2125,22 @@ case class GraftScan(
       context: SQLContext): T =
     new GraftRelation(this, context).asInstanceOf[T]
 
-  /** The library-built frame this scan executes — public so a plan
-    * audit can assert which partitions/files the SQL path touches. */
+  @transient private var built: DataFrame = _
+
+  /** The frame this scan executes, built on the first physical planning
+    * and reused by every later one: AQE re-plans a query once per
+    * stage, and rebuilding would repeat the build's planning work (the
+    * stats-sidecar pruning, manifest and footer reads) each time. The
+    * version is pinned per scan, so a reused frame reads exactly what
+    * a rebuilt one would. */
+  private[sources] def frame(spark: SparkSession): DataFrame = synchronized {
+    if (built == null) built = buildDf(spark)
+    built
+  }
+
+  /** The library-built frame this scan executes — a pure builder, public
+    * so a plan audit can assert which partitions/files the SQL path
+    * touches. Execution goes through [[frame]]. */
   def buildDf(spark: SparkSession): DataFrame = {
     val dir = spec.dir
     if (version < 0) {
@@ -2350,14 +2364,16 @@ object GraftScan {
 }
 
 /** The V1 bridge: schema = the scan's pruned schema, rows = the
-  * library-built frame. `buildScan` runs at execution planning on the
-  * driver; the returned RDD executes the inner (pushed-down, pruned)
-  * plan on the executors. */
+  * library-built frame. `buildScan` runs at every physical planning of
+  * the query on the driver — AQE re-plans once per stage — and returns
+  * the RDD of the scan's one frame ([[GraftScan.frame]]), so the frame's
+  * metadata work runs once per scan; the RDD executes the inner
+  * (pushed-down, pruned) plan on the executors. */
 class GraftRelation(val scan: GraftScan, override val sqlContext: SQLContext)
     extends BaseRelation with TableScan {
   override def schema: StructType = scan.readSchema()
   override def buildScan(): RDD[Row] =
-    scan.buildDf(sqlContext.sparkSession).rdd
+    scan.frame(sqlContext.sparkSession).rdd
 }
 
 /** A metadata table (`$history` / `$detail`): tiny ops-surface frames,

@@ -4,6 +4,12 @@ import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Classic-API bridge: Spark 4 `Column` wraps a `ColumnNode`, and the
   * Expression↔Column converters live `private[sql]` in
@@ -103,4 +109,52 @@ object Bridge {
     cdf.sparkSession.internalCreateDataFrame(
       cdf.queryExecution.toRdd, cdf.schema, isStreaming = true)
   }
+
+  /** Each parquet file's Spark schema, in `files` order, read in ONE
+    * job with Spark's own footer conversion — the per-file step of
+    * `mergeSchema=true` inference (the Spark row metadata a writer
+    * recorded, else the parquet-type conversion under the session's
+    * parquet flags). `ParquetFileFormat`'s footer readers and
+    * `SerializableConfiguration` are not public API. */
+  def footerSchemas(
+      spark: SparkSession, files: Seq[String]): Seq[StructType] = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val conf = new SerializableConfiguration(cs.sessionState.newHadoopConf())
+    // the session's parquet flags, as ParquetToSparkSchemaConverter(SQLConf)
+    // reads them (a SQLConf does not survive serialization to a task)
+    val sc = cs.sessionState.conf
+    val flags = (sc.isParquetBinaryAsString, sc.isParquetINT96AsTimestamp,
+      sc.caseSensitiveAnalysis, sc.parquetInferTimestampNTZEnabled,
+      sc.legacyParquetNanosAsLong, sc.parquetFieldIdReadEnabled,
+      sc.parquetIgnoreVariantAnnotation, sc.parquetReaderRespectUnknownTypeAnnotation)
+    val slices = math.max(1, math.min(files.size, cs.sparkContext.defaultParallelism))
+    val json = cs.sparkContext.parallelize(files.zipWithIndex, slices)
+      .mapPartitions { it =>
+        val c = conf.value
+        val converter = new ParquetToSparkSchemaConverter(flags._1, flags._2,
+          flags._3, flags._4, flags._5, flags._6, flags._7, flags._8)
+        it.map { case (f, i) =>
+          val p = new Path(f)
+          val in = HadoopInputFile.fromPath(p, c)
+          val footer = {
+            val r = ParquetFileReader.open(in)
+            try r.getFooter finally r.close()
+          }
+          i -> ParquetFileFormat.readSchemaFromFooter(
+            new Footer(p, footer), converter).json
+        }
+      }.collect()
+    json.sortBy(_._1).map(j => DataType.fromJson(j._2).asInstanceOf[StructType])
+      .toSeq
+  }
+
+  /** `mergeSchema=true`'s fold step (left fields first, right-only
+    * fields appended; case sensitivity per session). */
+  def mergeSchemas(spark: SparkSession, a: StructType, b: StructType): StructType =
+    a.merge(b, spark.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.caseSensitiveAnalysis)
+
+  /** The nullability a file-source relation reports for its data
+    * schema: every field, element and map value nullable, recursively. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -254,4 +254,45 @@ class TextAnalysisSpec extends SparkSpec {
       assert(math.abs(w - expect(id)._2) < 1e-6, s"doc $id: got $w want ${expect(id)._2}")
     }
   }
+  test("t29 broadcasts its per-document split only while the documents fit the broadcast threshold") {
+    import org.apache.spark.sql.functions._
+    // a small corpus whose docs share 5-word spans across splits
+    val d = java.nio.file.Files.createTempDirectory("grafttdocs").toString
+    spark.range(300).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("the quick brown fox"), (col("id") % 7).cast("string"),
+        lit("jumps over the lazy dog"), col("id").cast("string")).as("text"))
+      .write.parquet(s"$d/documents.parquet")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    // t29 checkpoints the shingle table eagerly, so its join plan shows
+    // only in that localCheckpoint's own execution
+    def run(): (Seq[String], Seq[String]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          if (f == "localCheckpoint") plans.add(qe.executedPlan.toString)
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        val rows = graft.SparkEntry.queries("t29_safe_split")(spark, d)
+          .collect().map(_.toString).sorted.toSeq
+        val deadline = System.nanoTime + 30L * 1000000000L
+        while (plans.size < 2 && System.nanoTime < deadline) Thread.sleep(10)
+        (rows, plans.toArray(Array.empty[String]).toSeq)
+      } finally spark.listenerManager.unregister(l)
+    }
+    val (defaultRows, _) = run()
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (offRows, offPlans) =
+      try run()
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val shingles = offPlans.filter(_.contains("Generate"))
+    assert(shingles.nonEmpty, s"no shingle checkpoint plan captured: $offPlans")
+    assert(shingles.forall(p => !p.contains("Broadcast")),
+      s"broadcasting is off, yet the split was broadcast:\n${shingles.mkString("\n")}")
+    assert(offRows === defaultRows)
+  }
 }

@@ -400,4 +400,72 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception](
       spark.sql("SELECT * FROM graft.t.never_registered").collect())
   }
+  /** Short call sites of the jobs `body` runs ("collect at File.scala:N"
+    * — the innermost non-Spark frame), in start order. A marker job
+    * after `body` drains the listener bus: events arrive in order, so
+    * once the marker is seen every job of `body` has been recorded. */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val marker = s"graft-job-drain-${System.nanoTime}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var drained = false
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.flatMap(x => Option(x.getProperty("spark.job.description"))).contains(marker))
+          drained = true
+        else // the result stage carries the job's call site
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!drained && System.nanoTime < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+    } finally sc.removeSparkListener(l)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a SQL range read joined to a dim plans its stats pruning once under AQE re-planning, then never again") {
+    val factDir = freshStore()
+    val dimDir = freshStore()
+    val days = spark.range(120).select(
+      date_add(to_date(lit("2020-01-01")), col("id").cast("int")).as("day"))
+    val fact = spark.range(1200).select(col("id").as("k"),
+      date_add(to_date(lit("2020-01-01")), (col("id") % 120).cast("int")).as("d"),
+      (col("id") % 7).as("v"))
+    PartitionedTable.commitLevels(spark, factDir, fact.repartition(4),
+      Seq(PartitionedTable.GenLevel("d", PartitionedTable.PartGen.Month, "pm")),
+      statsCols = Seq("d"))
+    PartitionedTable.commitLevels(spark, dimDir,
+      days.withColumn("label", date_format(col("day"), "EEE")),
+      Seq(PartitionedTable.GenLevel("day", PartitionedTable.PartGen.Year, "py")))
+    GraftCatalog.register(spark, "t", "aqe_fact", factDir, partCol = Some("pm"))
+    GraftCatalog.register(spark, "t", "aqe_dim", dimDir, partCol = Some("py"))
+    val sql =
+      """SELECT /*+ BROADCAST(dm) */ dm.label, count(*) AS n, sum(f.v) AS s
+        |FROM graft.t.aqe_fact f JOIN graft.t.aqe_dim dm ON f.d = dm.day
+        |WHERE f.d BETWEEN DATE'2020-02-03' AND DATE'2020-02-09'
+        |GROUP BY dm.label""".stripMargin
+    val expect = fact.filter(col("d").between("2020-02-03", "2020-02-09"))
+      .groupBy(date_format(col("d"), "EEE").as("label"))
+      .agg(count(lit(1)).as("n"), sum("v").as("s"))
+      .collect().map(_.toString).sorted.toSeq
+    def libraryJobs(): Seq[String] = {
+      var rows = Seq.empty[String]
+      val sites = jobCallSites {
+        rows = spark.sql(sql).collect().map(_.toString).sorted.toSeq
+      }
+      assert(rows === expect)
+      sites.filter(_.contains("PartitionedTable.scala"))
+    }
+    // cold: one read of the slices' _stats rows, however often AQE
+    // re-plans the query's stages; warm: pruning runs on the driver
+    assert(libraryJobs().size === 1, "stats pruning must plan once per read")
+    assert(libraryJobs().isEmpty, "cached _stats rows must prune without a job")
+  }
 }
