@@ -48,6 +48,22 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
+  /** True when the caller deliberately shaped `plan`'s layout: an
+    * explicit repartition/rebalance/sort at the plan's top, under only
+    * projections, filters and aliases — shaped frames must be written
+    * VERBATIM, never re-fanned/re-clustered by a write path. Shaping
+    * deeper in the plan (a sort under an aggregate or a join) does not
+    * survive to the written partitions, so it does not count. */
+  private[graft] def hasUserShaping(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    plan match {
+      case _: RepartitionOperation | _: RebalancePartitions | _: Sort => true
+      case p @ (_: Project | _: Filter | _: SubqueryAlias) => hasUserShaping(p.children.head)
+      case _ => false
+    }
+  }
+
   /** Fan a scan-bound frame out to the session's full parallelism when
     * the FILE LAYOUT under-parallelizes it (optimization guide §2.5,
     * "input skew: one huge unsplittable file ... repartition
@@ -64,19 +80,6 @@ object Tables {
     * stays on) and key-free, so it cannot introduce skew. Callers must
     * be row-order-insensitive above it (aggregates, joins, keyed
     * windows — NOT zipWithIndex-style global ranks). */
-  /** True when the caller deliberately shaped `plan`'s layout (an
-    * explicit repartition/rebalance/sort anywhere in it) — shaped
-    * frames must be written VERBATIM, never re-fanned/re-clustered by
-    * a write path. */
-  private[graft] def hasUserShaping(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    plan.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.Sort => true
-      case _ => false
-    }
-
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (plannedScanPartitions(df) >= math.max(2, target / 2)) df

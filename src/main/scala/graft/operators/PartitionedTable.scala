@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Strin
 
 /** Partition-scoped versioned tables: N per-partition
   * [[graft.streaming.VersionedStore]]s behind ONE table-level manifest
-  * — the layer that makes the lakehouse MERGE scale-true. The flat
-  * [[VersionedTable]] rewrites the whole snapshot per commit (the
-  * right shape for one partition directory, per its own scaladoc);
-  * here a CDC batch rewrites ONLY the partitions it touches:
+  * — the engine's one versioned-table format, and the layer that makes
+  * the lakehouse MERGE scale-true: a CDC batch rewrites ONLY the
+  * partitions it touches. An unpartitioned [[VersionedTable]] is the
+  * one-partition case of this format, behind its own facade:
   *
   *  - layout: `part=<hive-escaped value>/batch=<m>` per-partition
   *    immutable version dirs, plus `_table_manifest/v=<n>.manifest`
@@ -169,7 +169,7 @@ object PartitionedTable {
     * O(total log bytes) — at 10^5 commits with checkpoint-sized
     * manifests, reading whole files just for their headers would be
     * a driver-side full-log scan. */
-  private def headerLineOf(
+  private[operators] def headerLineOf(
       spark: SparkSession, dir: String, v: Long): Option[String] = {
     val hfs = VersionedStore.fs(spark, dir)
     val cp = manifestPath(dir, v)
@@ -208,8 +208,13 @@ object PartitionedTable {
 
   /** History header staged with the mapping — committed by the same
     * rename, so a manifest either has its history row or doesn't
-    * exist. Tags must not contain quotes or newlines. */
-  private def metaLine(operation: String, touched: Int, partitions: Int, at: String): String = {
+    * exist. Tags must not contain quotes or newlines. `extra` appends
+    * numeric fields a facade records ([[VersionedTable.CommitInfo]]'s
+    * `rows_in`, `quarantined`); [[history]]'s fixed schema ignores
+    * them. */
+  private[operators] def metaLine(
+      operation: String, touched: Int, partitions: Int, at: String,
+      extra: Seq[(String, Long)] = Nil): String = {
     require(Seq(operation, at).forall(t =>
       !t.exists(c => c == '"' || c == '\\' || c < ' ')),
       s"history tags must not contain quotes/backslashes/control chars: " +
@@ -222,7 +227,8 @@ object PartitionedTable {
       s"history tag '$at' is purely numeric — quoted numerics in " +
         "VERSION AS OF always mean manifest versions, so a numeric tag " +
         "could never be read back by name; pick a non-numeric tag")
-    s"""#{"operation":"$operation","touched":$touched,"partitions":$partitions,"at":"$at","ts":${System.currentTimeMillis}}"""
+    s"""#{"operation":"$operation","touched":$touched,"partitions":$partitions,"at":"$at","ts":${System.currentTimeMillis}""" +
+      extra.map { case (k, n) => s""","$k":$n""" }.mkString + "}"
   }
 
   /** Epoch-millis commit time of table version `v`: the commit's own
@@ -333,7 +339,7 @@ object PartitionedTable {
   }
 
   /** Atomically commit `mapping` as the next manifest version. */
-  private def commitManifest(
+  private[operators] def commitManifest(
       spark: SparkSession, dir: String, mapping: Map[String, Long],
       meta: Option[String] = None): Long = {
     val v = latest(spark, dir).map(_ + 1).getOrElse(0L)
@@ -345,7 +351,7 @@ object PartitionedTable {
 
   /** Per-version stats sidecar dir (underscore-prefixed: invisible to
     * data reads of the version dir). */
-  private val StatsDir = "_stats"
+  private[operators] val StatsDir = "_stats"
 
   /** Per-version bloom sidecar dir — the POINT-LOOKUP skip level.
     * Min/max stats prune range predicates on clustered columns but are
@@ -371,6 +377,12 @@ object PartitionedTable {
     * file. Raise for bigger files — sizing is per-call. */
   val DefaultBloomBits: Long = 1L << 20
 
+  /** A scanned row's data-file name, the key of its `_stats`/`_bloom`
+    * sidecar rows, read from the scan's file metadata. A per-row regex
+    * over `input_file_name()` cost ~5 s per 600k landed rows on a
+    * 4-vCPU VM; this column costs under 1 s. */
+  private def dataFileName: Column = col("_metadata.file_name")
+
   /** The k (col, bit position) probes of every `bloomCols` value — the
     * single hash geometry shared by the write paths and [[readEq]]. */
   private def bloomProbes(bloomCols: Seq[String], bloomBits: Long): Column =
@@ -386,7 +398,7 @@ object PartitionedTable {
     * their version. Returns dirName -> committed store version. Crash
     * anywhere here = orphan store versions only; no manifest
     * references them. */
-  private def landPartitions(
+  private[operators] def landPartitions(
       spark: SparkSession, dir: String, df: DataFrame, partCol: String,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBits: Long = DefaultBloomBits, preShaped: Boolean = false): Map[String, Long] = {
@@ -433,7 +445,7 @@ object PartitionedTable {
       val stats = spark.read.schema(landedSchema).option("basePath", tmp.toString)
         .parquet(tmp.toString)
         .groupBy(col(partCol).as("part"),
-          regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"))
+          dataFileName.as("file"))
         .agg(aggs.head, aggs.tail: _*)
       statsSchema = Some(stats.schema)
       stats.withColumn(PartDir, col("part"))
@@ -459,7 +471,7 @@ object PartitionedTable {
       spark.read.schema(landedSchema).option("basePath", tmp.toString)
         .parquet(tmp.toString)
         .select(col(partCol).as("part"),
-          regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
+          dataFileName.as("file"),
           explode(bloomProbes(bloomCols, bloomBits)).as("pr"))
         .select(col("part"), col("file"), col("pr.col").as("col"),
           expr("pr.p div 64").as("word"),
@@ -1202,7 +1214,7 @@ object PartitionedTable {
     * optimization and its collect runs no job. Rows that would take
     * more than half the cache's byte budget stay a distributed scan of
     * the sidecars instead — the only fallback, chosen by size. */
-  private def statsOf(spark: SparkSession, vdirs: Seq[Path]): DataFrame = {
+  private[operators] def statsOf(spark: SparkSession, vdirs: Seq[Path]): DataFrame = {
     val keys = vdirs.map(_.toString).distinct.sorted
     val paths = keys.map(k => new Path(k, StatsDir).toString)
     lazy val distributed = readParquet(spark, paths)
@@ -1708,7 +1720,8 @@ object PartitionedTable {
     * touched partitions' new store versions and returns
     * (landed dirName -> store version, ALL touched dir names — landed
     * plus emptied). Commit point NOT included; callers build the new
-    * mapping as `(base -- touched) ++ landed` and commit.
+    * mapping as `(base -- touched) ++ landed` and commit. `preShaped`
+    * lands the rewrite verbatim ([[landPartitions]]).
     * `private[operators]` so the concurrency spec can interleave two
     * writers' land and commit steps deterministically. */
   private[operators] def applyMergeParts(
@@ -1725,7 +1738,8 @@ object PartitionedTable {
       dvMaxFraction: Double = DvMaxFraction,
       bloomCols: Seq[String] = Nil,
       bloomBits: Long = DefaultBloomBits,
-      dvMinBase: Long = DvMinBaseRows): (Map[String, Long], Seq[String]) = {
+      dvMinBase: Long = DvMinBaseRows,
+      preShaped: Boolean = false): (Map[String, Long], Seq[String]) = {
     refuseRetiredNames(spark, dir, changes.drop(opCol))
     // materialize the batch ONCE (census + DV + append + rewrite all
     // re-read it) — unless it is ALREADY driver-materialized (a
@@ -1744,7 +1758,8 @@ object PartitionedTable {
       }
     // caller shaping must be read off the RAW plan: the checkpoint
     // below truncates it to a LogicalRDD, hiding any repartition
-    val batchShaped = graft.Tables.hasUserShaping(changes.queryExecution.analyzed)
+    val batchShaped =
+      preShaped || graft.Tables.hasUserShaping(changes.queryExecution.analyzed)
     val pre = changes.filter(col(partCol).isNotNull)
     val batch =
       if (isMaterialized(changes.queryExecution.analyzed)) pre
@@ -2226,12 +2241,17 @@ object PartitionedTable {
       .toSeq.sorted
   }
 
-  /** Partition-aware change data feed: the [[VersionedTable.changes]]
-    * semantics (insert/delete/update[_pre|_post] events, identical
-    * rows emit nothing), computed over CHANGED partitions only —
-    * untouched partitions are never scanned (their pointers match, so
-    * their delta is provably empty). The diff joins on
-    * (partition, key), the table's key identity. */
+  /** Partition-aware change data feed: the row-level delta a consumer
+    * (a downstream sync, an incremental view, an audit) applies to get
+    * from version `from` to version `to`. Emits the TO-side image
+    * (FROM-side for deletes) plus an `op` column: "insert" (key only in
+    * `to`), "delete" (key only in `from`), "update" (key in both, any
+    * non-key column differs; `preImages` splits it into an
+    * "update_pre"/"update_post" pair); identical rows emit nothing.
+    * Computed over CHANGED partitions only — untouched partitions are
+    * never scanned (their pointers match, so their delta is provably
+    * empty). The diff joins on (partition, key), the table's key
+    * identity. */
   def changes(
       spark: SparkSession,
       dir: String,
@@ -2268,14 +2288,57 @@ object PartitionedTable {
         donor.limit(0)
       }
     }
-    VersionedTable.diffFrames(
-      side(a, b), side(b, a), Seq(partCol, keyCol), preImages)
+    diffFrames(side(a, b), side(b, a), Seq(partCol, keyCol), preImages)
   }
 
-  /** Per-partition auto-compaction — [[VersionedTable.autoCompact]]'s
-    * flag-then-rewrite lifecycle at partition scope: flag every
-    * partition whose pinned version's file count exceeds
-    * `smallFileRatio` × its bin-packed ideal, rewrite ONLY flagged
+  /** The row-level diff two snapshots imply, keyed by `keyCols`: one
+    * full outer join plus a codegen'd struct comparison, so no driver
+    * traffic and unchanged rows never materialize. */
+  private def diffFrames(
+      a: DataFrame, b: DataFrame,
+      keyCols: Seq[String], preImages: Boolean): DataFrame = {
+    // schema evolution across the diffed versions: widen each side
+    // with null columns for the other's additions (key columns must
+    // exist on both). A pre-evolution row then compares null-vs-null
+    // on the new column and emits nothing unless something real
+    // changed — the evolution itself is not an event, matching a
+    // reader's null-filled view of old files.
+    require(keyCols.forall(k => a.columns.contains(k) && b.columns.contains(k)),
+      s"diff key columns $keyCols must exist on both sides " +
+        s"(${a.columns.toSeq} vs ${b.columns.toSeq})")
+    val aOnly = a.columns.filterNot(b.columns.contains)
+    val bOnly = b.columns.filterNot(a.columns.contains)
+    val aw = bOnly.foldLeft(a)((df, c) => df.withColumn(c, lit(null).cast(
+      b.schema(c).dataType)))
+    val bw = aOnly.foldLeft(b)((df, c) => df.withColumn(c, lit(null).cast(
+      a.schema(c).dataType)))
+    val cols = aw.columns.toSeq
+    val bAligned = if (bw.columns.toSeq == cols) bw else bw.select(cols.map(col): _*)
+    val payload = cols.filterNot(keyCols.contains)
+    val av = aw.select(keyCols.map(col) :+ struct(payload.map(col): _*).as("__a"): _*)
+    val bv = bAligned.select(keyCols.map(col) :+ struct(payload.map(col): _*).as("__b"): _*)
+    def ev(op: String, img: Column) =
+      struct(lit(op).as("op"), img.as("img"))
+    val updateEvents =
+      if (preImages) array(ev("update_pre", col("__a")), ev("update_post", col("__b")))
+      else array(ev("update", col("__b")))
+    // one pass: each key yields 0..2 typed (op, image) events; the
+    // empty case is a 0-length slice so the array stays typed without
+    // a hand-written DDL cast
+    val events =
+      when(col("__a").isNull, array(ev("insert", col("__b"))))
+        .when(col("__b").isNull, array(ev("delete", col("__a"))))
+        .when(col("__a") =!= col("__b"), updateEvents)
+        .otherwise(slice(array(ev("none", col("__a"))), 1, 0))
+    av.join(bv, keyCols, "full_outer")
+      .select(keyCols.map(col) :+ explode(events).as("__e"): _*)
+      .select(keyCols.map(col) ++ Seq(col("__e.op").as("op")) ++
+        payload.map(c => col(s"__e.img.$c").as(c)): _*)
+  }
+
+  /** Per-partition auto-compaction, a flag-then-rewrite lifecycle at
+    * partition scope: flag every partition whose pinned version's file
+    * count exceeds `smallFileRatio` × its bin-packed ideal, rewrite ONLY flagged
     * partitions (one ranged write job over their union — partitions
     * with more bytes get proportionally more output files), and commit
     * a manifest where unflagged partitions carry their pointers (and
@@ -2317,7 +2380,7 @@ object PartitionedTable {
     }
     if (flagged.nonEmpty)
       rewritePartitions(spark, dir, m, flagged, cloneSrc, targetBytes,
-        partCol, cluster.toSeq, statsCols, bloomCols, bloomBits, "compact")
+        partCol, cluster.toSeq, statsCols, bloomCols, bloomBits, "compact"): Unit
     flagged.map(_._1)
   }
 
@@ -2412,7 +2475,7 @@ object PartitionedTable {
         s"table version $cur under $dir")
     rewritePartitions(spark, dir, m, selected, cloneSrcOf(spark, dir),
       targetBytes, partCol, Seq(cluster), statsCols, bloomCols, bloomBits,
-      "optimize")
+      "optimize"): Unit
     selected.map(_._1)
   }
 
@@ -2420,13 +2483,14 @@ object PartitionedTable {
     * [[optimizePartitions]]: read the `chosen` partitions of mapping
     * `m`, range-pack them on the partition column then `cluster` into
     * ~`targetBytes` files, land them with the inherited sidecars and
-    * commit `m` with the chosen entries repointed as a new version. */
-  private def rewritePartitions(
+    * commit `m` with the chosen entries repointed as a new version.
+    * Returns that version. */
+  private[operators] def rewritePartitions(
       spark: SparkSession, dir: String, m: Map[String, Long],
       chosen: Seq[(String, Long)], cloneSrc: Option[String],
       targetBytes: Long, partCol: String, cluster: Seq[Column],
       statsCols: Seq[String], bloomCols: Seq[String], bloomBits: Long,
-      operation: String): Unit = {
+      operation: String): Long = {
     // files and sidecars live on the version itself, or on a DV
     // delta's base (deltas size by their base)
     val baseDirs = chosen.map { case (name, sv) =>
@@ -2444,7 +2508,13 @@ object PartitionedTable {
     val totalBytes = baseDirs
       .map(p => Compaction.layoutStats(spark, p.toString)._2).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val shape = col(partCol) +: cluster
+    // one partition's column is a constant: as the leading sort key it
+    // gives every row the same sort prefix, so each comparison falls
+    // through to a full row compare (a 600k-row one-partition compaction
+    // job took 2.3 s with the constant key leading, 0.8 s without, on 4
+    // vCPUs)
+    val shape =
+      if (chosen.size == 1 && cluster.nonEmpty) cluster else col(partCol) +: cluster
     val packed = readMapped(spark, dir, chosen.toMap)
       .repartitionByRange(n, shape: _*)
       .sortWithinPartitions(shape: _*)
@@ -2498,7 +2568,7 @@ object PartitionedTable {
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     spark.read.parquet(tmp.toString)
-      .groupBy(regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"))
+      .groupBy(dataFileName.as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("part", lit(partValue))
       .coalesce(1)
@@ -2513,7 +2583,7 @@ object PartitionedTable {
       spark: SparkSession, tmp: Path, bloomCols: Seq[String],
       bloomBits: Long, partValue: String): Unit = {
     spark.read.parquet(tmp.toString)
-      .select(regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"),
+      .select(dataFileName.as("file"),
         explode(bloomProbes(bloomCols, bloomBits)).as("pr"))
       .select(col("file"), col("pr.col").as("col"),
         expr("pr.p div 64").as("word"),
@@ -4519,7 +4589,7 @@ object PartitionedTable {
     * conf — no SparkSession, so it runs identically on the driver (the
     * fast path) and inside executor tasks (the distributed path); both
     * paths ARE this function, identical output by construction. */
-  private def detailRowOf(
+  private[operators] def detailRowOf(
       conf: org.apache.hadoop.conf.Configuration, dir: String,
       cloneSrc: Option[String], name: String, sv: Long):
       (String, Long, String, Long, Long, Long, Boolean, Boolean, Boolean) = {
@@ -4720,9 +4790,9 @@ object PartitionedTable {
       "bytes", "n_rows", "is_dv", "has_stats", "has_bloom")
   }
 
-  /** Per-JVM scratch root (the [[VersionedTable]] pattern: one temp dir
-    * per process, removed at exit; per-invocation state reset inside
-    * the query so repeated bench passes stay deterministic). */
+  /** Per-JVM scratch root: one temp dir per process, removed at exit;
+    * per-invocation state reset inside the query so repeated bench
+    * passes stay deterministic. */
   private lazy val workDir: java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory("graft-partitioned-table")
     sys.addShutdownHook {

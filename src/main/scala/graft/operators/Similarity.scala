@@ -380,6 +380,23 @@ object Similarity {
   private def cmpDouble(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
 
+  /** Driver-side bound on one walk round's collected candidate rows. */
+  private[operators] val WalkCollectCap: Int = 1000000
+
+  /** `df.collect()` for a walk round, refusing more than `cap` rows. The
+    * check reads the rows the round's one job already returned — no
+    * count job, no limit — so a candidate set that outgrows its
+    * constant bound fails loud with the cap named, instead of growing
+    * the driver-side beam without limit. */
+  private[operators] def collectCapped(
+      df: DataFrame, what: String, cap: Int = WalkCollectCap): Array[org.apache.spark.sql.Row] = {
+    val rows = df.collect()
+    if (rows.length > cap) throw new IllegalStateException(
+      s"$what: collected ${rows.length} candidate rows, over the walk cap " +
+        s"of $cap rows (Similarity.WalkCollectCap)")
+    rows
+  }
+
   /** One ef-search beam entry; `(cos DESC, id ASC)` is the beam order. */
   private final case class BeamRow(id: Long, cos: Double, exp: Boolean)
 
@@ -473,11 +490,10 @@ object Similarity {
         // aggregate and the per-query rank cut the previous form
         // shuffled for run in [[mergeCut]] on the driver instead
         // (guide §2.4: the exchange carried constants, not data)
-        val nbrRows = g.join(broadcast(fDf), "vec_id")
+        val nbrRows = collectCapped(g.join(broadcast(fDf), "vec_id")
           .join(broadcast(qbLocal), Seq("query_id"))
           .select(col("query_id"), col("nbr"),
-            VectorOps.cosineR(col("ne"), col("qe")).as("cos"))
-          .collect()
+            VectorOps.cosineR(col("ne"), col("qe")).as("cos")), "batchEfSearch")
         val byQid = scala.collection.mutable.LinkedHashMap
           .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
         nbrRows.foreach { r =>
@@ -542,10 +558,9 @@ object Similarity {
         // probe + neighbor scoring, no exchange): the scored candidate
         // set is constant-bounded, so the merge aggregate and top-W cut
         // the previous form shuffled for run in [[mergeCut]] driver-side
-        val nbrRows = g.join(broadcast(fDf), "vec_id")
+        val nbrRows = collectCapped(g.join(broadcast(fDf), "vec_id")
           .select(col("nbr"),
-            VectorOps.cosineR(col("ne"), typedLit(qe)).as("cos"))
-          .collect()
+            VectorOps.cosineR(col("ne"), typedLit(qe)).as("cos")), "efSearch")
         beam = mergeCut(marked,
           nbrRows.iterator.map(r => (r.getLong(0), r.getDouble(1))),
           GraphBeamWidth)

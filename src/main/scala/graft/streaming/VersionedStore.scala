@@ -37,9 +37,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (packing: each version is one batch's assignment; the state is the
   * union of all versions) is the caller's contract.
   *
-  * The batch side reuses the same seam: [[graft.operators.VersionedTable]]
-  * commits layout rewrites (compaction, Z-order) as full-snapshot
-  * versions, giving readers snapshot isolation and exact time travel.
+  * The batch side builds on the same seam: every partition of a
+  * [[graft.operators.PartitionedTable]] (and so the one partition of a
+  * [[graft.operators.VersionedTable]]) is a store of immutable
+  * `batch=<n>` versions, which that table's manifest pins and commits.
   */
 private[graft] object VersionedStore {
 
@@ -54,15 +55,9 @@ private[graft] object VersionedStore {
   private val MarkerFlag = "_marker_commits"
   private val Marker = "_COMMITTED"
 
-  /** Per-version commit-metadata sidecar ([[graft.operators.VersionedTable.history]]).
-    * Written into the TEMP dir before the rename, so it commits
-    * atomically with the version's data — a version either has its
-    * history row or doesn't exist. `_`-prefixed: invisible to reads. */
-  private[graft] val MetaFile = "_graft_commit.json"
-
-  /** Exact row count of a just-written parquet dir from file FOOTERS —
-    * a driver-side metadata read (#files footer opens), never a Spark
-    * job, so recording commit metadata costs no executor time. */
+  /** Exact row count of a parquet dir from file FOOTERS — a
+    * driver-side metadata read (#files footer opens), never a Spark
+    * job. */
   private[graft] def footerRowCount(spark: SparkSession, dir: Path): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val hfs = dir.getFileSystem(conf)
@@ -76,18 +71,6 @@ private[graft] object VersionedStore {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-  }
-
-  /** Driver-side read of a committed version's metadata sidecar. */
-  private[graft] def readMeta(spark: SparkSession, dir: String, id: Long): Option[String] = {
-    val hfs = fs(spark, dir)
-    val p = new Path(path(dir, id), MetaFile)
-    if (!hfs.exists(p)) None
-    else {
-      val in = hfs.open(p)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
   }
 
   /** Opt this store into marker commits (object-store mode). Call once
@@ -137,44 +120,18 @@ private[graft] object VersionedStore {
     * snapshot landed. Any other rename failure (filesystem error) throws
     * so the streaming query fails loudly instead of silently folding
     * from stale state. */
-  def commit(spark: SparkSession, dir: String, id: Long, df: DataFrame): Boolean =
-    commit(spark, dir, id, df, None)
-
-  /** As [[commit]], with an optional metadata sidecar: `metaOf` receives
-    * the written version's exact row count (a footer-driven count of the
-    * temp write — the plan is never executed twice) and returns the JSON
-    * to stage as [[MetaFile]] INSIDE the temp dir, so metadata and data
-    * land in the same atomic rename/marker commit. */
-  def commit(
-      spark: SparkSession,
-      dir: String,
-      id: Long,
-      df: DataFrame,
-      metaOf: Option[Long => String],
-      stage: Option[Path => Unit] = None): Boolean = {
+  def commit(spark: SparkSession, dir: String, id: Long, df: DataFrame): Boolean = {
     if (versions(spark, dir).contains(id)) return false
     val hfs = fs(spark, dir)
     val tmp = new Path(dir, s".tmp-$id")
     val dest = path(dir, id)
-    def stageMeta(): Unit = {
-      // caller-staged sidecars (e.g. the per-file stats manifest) land
-      // in the temp dir too, inside the same atomic commit
-      stage.foreach(f => f(tmp))
-      metaOf.foreach { f =>
-        val out = hfs.create(new Path(tmp, MetaFile), true)
-        try out.write(f(footerRowCount(spark, tmp))
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
+    df.write.mode("overwrite").parquet(tmp.toString)
     if (usesMarkers(hfs, dir)) {
       // marker protocol (object-store mode, single committer): an
       // UNMARKED dest dir is garbage from a crashed non-atomic rename —
       // clear it, redo the copy, and only then PUT the marker (the
       // atomic commit point). A crash anywhere before the marker leaves
       // the version invisible and this path re-runs on retry.
-      df.write.mode("overwrite").parquet(tmp.toString)
-      stageMeta()
       if (hfs.exists(dest)) hfs.delete(dest, true)
       if (!hfs.rename(tmp, dest)) {
         hfs.delete(tmp, true)
@@ -185,8 +142,6 @@ private[graft] object VersionedStore {
       hfs.create(new Path(dest, Marker), false).close()
       true
     } else {
-      df.write.mode("overwrite").parquet(tmp.toString)
-      stageMeta()
       if (hfs.rename(tmp, dest)) true
       else {
         hfs.delete(tmp, true)

@@ -830,17 +830,18 @@ class PartitionedTableSpec extends SparkSpec {
     val dir = freshStore()
     PartitionedTable.commit(spark, dir, table(40), "part")
 
-    // same logical changes through the flat VersionedTable
-    val flat = Files.createTempDirectory("ptable-flat").toString + "/t"
-    VersionedTable.commit(spark, flat, table(40))
     val batch = Seq(
       (2L, "p2", 222L, "upsert"), (3L, "p3", 0L, "delete"),
       (77L, "p1", 770L, "upsert")).toDF("k", "part", "v", "op")
     PartitionedTable.merge(spark, dir, batch, "k", "part")
-    VersionedTable.merge(spark, flat, batch, "k")
+    // the reference: the flat full-snapshot merge — drop every base row
+    // whose key the batch names (broadcast anti join), then union the
+    // upserts
+    val keys = batch.select("k").distinct()
+    val flat = table(40).join(broadcast(keys), Seq("k"), "left_anti")
+      .unionByName(batch.filter(col("op") === "upsert").drop("op"))
     val a = PartitionedTable.read(spark, dir).orderBy("k", "part").collect().toSeq
-    val b = VersionedTable.read(spark, flat)
-      .select("k", "part", "v").orderBy("k", "part").collect().toSeq
+    val b = flat.select("k", "part", "v").orderBy("k", "part").collect().toSeq
     assert(a === b, "partitioned merge must equal the flat merge")
 
     val bad = Seq((2L, "p2", 9L, "upsrt")).toDF("k", "part", "v", "op")
@@ -853,6 +854,36 @@ class PartitionedTableSpec extends SparkSpec {
         spark.range(5).select(col("id").as("k"), (col("id") % 2).as("part")), "part")
     }
     assert(e.getMessage.contains("string"))
+  }
+
+  test("a commit batch sorted under an aggregate lands clustered; one sorted at the top lands verbatim") {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false") // keep the aggregate's 4 output partitions
+    try {
+      // the orderBy sits under the aggregate, so it shapes nothing the
+      // write sees: each of the 4 aggregate partitions holds rows of
+      // every table partition
+      val agg = table(400).orderBy("v").groupBy("part", "k").agg(max("v").as("v"))
+      def filesPerPart(d: String): Seq[Int] =
+        PartitionedTable.manifest(spark, d, 0L).toSeq.sortBy(_._1).map {
+          case (name, sv) => Compaction.layoutStats(spark,
+            VersionedStore.path(s"$d/$name", sv).toString)._1
+        }
+      val clustered = freshStore()
+      PartitionedTable.commit(spark, clustered, agg, "part")
+      val verbatim = freshStore()
+      PartitionedTable.commit(spark, verbatim, agg.sortWithinPartitions("k"), "part")
+      assert(filesPerPart(clustered) === Seq(1, 1, 1, 1),
+        "clustered by partition value: one file per partition")
+      assert(filesPerPart(verbatim).forall(_ > 1),
+        s"a top-level sort lands verbatim: ${filesPerPart(verbatim)}")
+      assert(PartitionedTable.read(spark, clustered).orderBy("k").collect().toSeq ===
+        PartitionedTable.read(spark, verbatim).orderBy("k").collect().toSeq)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("stats sidecars survive numeric/date-like partition values (no dir-inference retyping)") {

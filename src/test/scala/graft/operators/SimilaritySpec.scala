@@ -145,6 +145,17 @@ class SimilaritySpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
+  test("walk collects are capped: over the cap raises a named error, at the cap passes") {
+    val df = spark.range(6).toDF("id")
+    assert(Similarity.collectCapped(df, "probe", cap = 6).length === 6)
+    val e = intercept[IllegalStateException] {
+      Similarity.collectCapped(df, "probe", cap = 5)
+    }
+    assert(e.getMessage.contains("probe") && e.getMessage.contains("cap of 5 rows"),
+      e.getMessage)
+    assert(Similarity.WalkCollectCap === 1000000)
+  }
+
   test("s23 batched walk: full ranked top-10 per query, no query vectors in results") {
     val dir = "/root/testdata/sf0.001"
     val rows = graft.SparkEntry.queries("s23_batch_graph_search")(spark, dir)

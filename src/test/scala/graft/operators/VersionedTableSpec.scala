@@ -15,6 +15,12 @@ class VersionedTableSpec extends SparkSpec {
   private def freshStore(): String =
     Files.createTempDirectory("vtable").toString + "/table"
 
+  /** Version `v`'s data dir: the one partition slice its manifest pins. */
+  private def versionDir(dir: String, v: Long): String = {
+    val (name, sv) = PartitionedTable.manifest(spark, dir, v).head
+    VersionedStore.path(s"$dir/$name", sv).toString
+  }
+
   test("commit / read / time travel: version N-1 stays exact after a rewrite") {
     val dir = freshStore()
     val v0 = spark.range(100).select(col("id"), (col("id") % 7).as("k"))
@@ -35,6 +41,22 @@ class VersionedTableSpec extends SparkSpec {
       VersionedTable.read(spark, dir, asOf = Some(5L))
     }
     assert(e.getMessage.contains("not committed"))
+  }
+
+  test("an empty snapshot commits as a version that reads back empty with its schema") {
+    val dir = freshStore()
+    val empty = spark.range(10).select(col("id"), (col("id") * 2).as("v"))
+      .filter(col("id") < 0)
+    assert(VersionedTable.commit(spark, dir, empty) === 0L)
+    val v0 = VersionedTable.read(spark, dir)
+    assert(v0.columns.toSeq === Seq("id", "v"))
+    assert(v0.count() === 0L)
+    assert(VersionedTable.commit(spark, dir, spark.range(3)
+      .select(col("id"), (col("id") * 2).as("v"))) === 1L)
+    assert(VersionedTable.read(spark, dir).count() === 3L)
+    assert(VersionedTable.read(spark, dir, asOf = Some(0L)).count() === 0L)
+    assert(VersionedTable.history(spark, dir).select("rows_out").collect()
+      .map(_.getLong(0)).toSeq === Seq(0L, 3L))
   }
 
   test("a crashed rewrite leaves the prior version readable and the store committable") {
@@ -67,7 +89,7 @@ class VersionedTableSpec extends SparkSpec {
     // a deliberately shredded layout: 16 files for a tiny table
     VersionedTable.commit(spark, dir,
       spark.range(0, 2000, 1, 16).select(col("id"), (col("id") * 2).as("v")))
-    val v0Path = VersionedStore.path(dir, 0L).toString
+    val v0Path = versionDir(dir, 0L)
     val (files0, bytes0) = Compaction.layoutStats(spark, v0Path)
     assert(files0 === 16)
 
@@ -87,7 +109,7 @@ class VersionedTableSpec extends SparkSpec {
     // vacuum keeps the newest `keep` versions only
     VersionedTable.commit(spark, dir, VersionedTable.read(spark, dir))
     assert(VersionedTable.vacuum(spark, dir, keep = 2) === Seq(0L))
-    assert(VersionedStore.versions(spark, dir).sorted === Seq(1L, 2L))
+    assert(PartitionedTable.versions(spark, dir).sorted === Seq(1L, 2L))
     assert(VersionedTable.read(spark, dir).count() === 2000)
   }
 
@@ -129,8 +151,7 @@ class VersionedTableSpec extends SparkSpec {
     val dir = freshStore()
     // a healthy single version below both bounds: no-op
     VersionedTable.commit(spark, dir, spark.range(1000).toDF("id").coalesce(1))
-    val (_, bytes) = Compaction.layoutStats(spark,
-      graft.streaming.VersionedStore.path(dir, 0L).toString)
+    val (_, bytes) = Compaction.layoutStats(spark, versionDir(dir, 0L))
     assert(VersionedTable.autoCompact(spark, dir, targetBytes = bytes).isEmpty,
       "below both bounds autoCompact must not rewrite anything")
     assert(VersionedTable.latest(spark, dir) === Some(0L))
@@ -143,7 +164,7 @@ class VersionedTableSpec extends SparkSpec {
     val (fid, before, after) = folded.get
     assert(before === 16 && after < before)
     // fold committed + vacuumed to the horizon (keep=2)
-    assert(graft.streaming.VersionedStore.versions(spark, dir).sorted === Seq(1L, fid))
+    assert(PartitionedTable.versions(spark, dir).sorted === Seq(1L, fid))
     assert(VersionedTable.read(spark, dir).agg(sum("id")).head.getLong(0) === 499500L)
     // history records the fold as a compact operation
     val ops = VersionedTable.history(spark, dir).collect()
@@ -155,7 +176,7 @@ class VersionedTableSpec extends SparkSpec {
       VersionedTable.read(spark, dir).coalesce(1)))
     assert(VersionedTable.autoCompact(spark, dir, targetBytes = bytes,
       maxVersions = 3).nonEmpty, "version count past the bound must flag")
-    assert(graft.streaming.VersionedStore.versions(spark, dir).size === 2,
+    assert(PartitionedTable.versions(spark, dir).size === 2,
       "the fold vacuums to the read horizon")
   }
 
@@ -166,8 +187,7 @@ class VersionedTableSpec extends SparkSpec {
       ((col("id") * 2654435761L) % 10000).as("x"), (col("id") % 100).as("g"))
     VersionedTable.commit(spark, dir, df.repartition(16), statsCols = Seq("x"))
     // clustered rewrite with the stats manifest
-    val (_, bytes) = Compaction.layoutStats(spark,
-      graft.streaming.VersionedStore.path(dir, 0L).toString)
+    val (_, bytes) = Compaction.layoutStats(spark, versionDir(dir, 0L))
     VersionedTable.compact(spark, dir, targetBytes = math.max(1L, bytes / 16),
       cluster = Some(col("x")), statsCols = Seq("x"))
 
@@ -213,8 +233,8 @@ class VersionedTableSpec extends SparkSpec {
       (3L, 999L, "upsert"), (200L, 1L, "upsert"), (7L, 0L, "delete")
     ).toDF("k", "v", "op"), "k", at = "run-2")
 
-    // a crashed commit must leave NO history row (sidecar is staged in
-    // the temp dir, so it commits atomically with the data)
+    // a crashed commit must leave NO history row (the header rides the
+    // manifest rename, so it commits atomically with the data)
     intercept[Exception] {
       VersionedTable.commit(spark, dir, spark.range(10)
         .select(col("id"), assert_true(col("id") < 5).as("chk")))
@@ -227,13 +247,6 @@ class VersionedTableSpec extends SparkSpec {
       (0L, "commit", 100L, 100L, 0L, "run-1"),
       (1L, "merge", 3L, 100L, 0L, "run-2")), // 100 - 1 delete + 1 insert
       s"unexpected history: $h")
-
-    // versions written by raw VersionedStore folds (no sidecar) read
-    // fine and are simply absent from history
-    graft.streaming.VersionedStore.commit(spark, dir, 5L, spark.range(3)
-      .select(col("id").as("k"), col("id").as("v")))
-    assert(VersionedTable.read(spark, dir).count() === 3)
-    assert(VersionedTable.history(spark, dir).count() === 2)
   }
 
   test("flat merge schema evolution: opt-in widening null-fills both directions, snapshot stays homogeneous") {
@@ -320,7 +333,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.commit(spark, dir, df.repartition(8))
 
     val z = ZOrder.zvalueScaled(col("x"), n - 1, col("y"), n - 1, bits = 12)
-    val v0Path = VersionedStore.path(dir, 0L).toString
+    val v0Path = versionDir(dir, 0L)
     val (_, bytes) = Compaction.layoutStats(spark, v0Path)
     val (id, _, after) =
       VersionedTable.compact(spark, dir, targetBytes = bytes / 8, cluster = Some(z))
@@ -356,7 +369,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.CommitInfo("merge", at = "run-7"): Unit
   }
 
-  test("time travel by timestamp: sidecar stamps resolve versions, raw-fold versions fall back to mtime, early asks fail loud") {
+  test("time travel by timestamp: commit stamps resolve versions, early asks fail loud") {
     val dir = freshStore()
     VersionedTable.commit(spark, dir, spark.range(50).toDF("id"))
     val after0 = System.currentTimeMillis()
@@ -369,13 +382,5 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.readAt(spark, dir, after0).count() === 50)
     intercept[IllegalArgumentException](
       VersionedTable.versionAt(spark, dir, 0L))
-
-    // a raw VersionedStore fold writes no sidecar: resolution falls
-    // back to the version dir's mtime instead of failing
-    Thread.sleep(2)
-    assert(VersionedStore.commit(spark, dir, 2L, spark.range(9).toDF("id")))
-    assert(VersionedTable.versionAt(spark, dir,
-      System.currentTimeMillis() + 60000) === 2L)
-    assert(VersionedTable.versionAt(spark, dir, after0) === 0L)
   }
 }

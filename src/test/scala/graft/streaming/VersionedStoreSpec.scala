@@ -92,11 +92,6 @@ class VersionedStoreSpec extends SparkSpec {
     assert(!VersionedStore.commit(spark, dir, 1L, spark.range(99).toDF("id")))
     assert(spark.read.parquet(VersionedStore.path(dir, 1L).toString).count() === 5)
 
-    // the whole VersionedTable stack rides the marker store unchanged
-    graft.operators.VersionedTable.commit(spark, dir, spark.range(7).toDF("id"))
-    assert(graft.operators.VersionedTable.latest(spark, dir) === Some(2L))
-    assert(graft.operators.VersionedTable.read(spark, dir).count() === 7)
-
     // flipping an existing rename-committed store is refused
     val plain = Files.createTempDirectory("vstore-plain").toString + "/store"
     VersionedStore.commit(spark, plain, 0L, df)
